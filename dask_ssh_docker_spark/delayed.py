@@ -9,12 +9,25 @@ a migrating user that exact idiom — ``delayed(fn)(*args).compute()``,
 including nested ``Delayed`` arguments and containers of them — while
 running every task in Spark's Python workers, not the driver:
 
-- the task DAG is walked in dependency layers;
-- each layer's ready tasks execute as ONE Spark job
-  (``sc.parallelize(payloads, len(layer)).map(run)``) — independent
-  tasks run in parallel across executor cores exactly as dask's
-  scheduler would run graph siblings;
-- results come back to the driver and feed downstream tasks.
+- nodes are fused into Spark tasks by linear fusion only: a node whose
+  only pending dependency has it as sole consumer runs in that
+  dependency's task, so a chain is one task and a fused task never
+  holds two nodes that could have run in parallel;
+- fused tasks run level by level, ONE Spark job per fused level packed
+  into at most ``slots`` partitions, where ``slots`` is the number of
+  tasks the cluster runs at once (:func:`.session.task_slots`) — a
+  level of at most ``slots`` tasks still runs one task per partition;
+  a wider level's tasks are dealt round-robin onto the partitions, so a
+  run of heavy neighbours (one dominant group's leaves) spreads across
+  slots;
+- every node's value comes back to the driver and feeds downstream
+  tasks.
+
+Packing trades Spark's per-task load balancing for fewer task launches.
+It pays while node bodies are short next to Spark's per-task launch
+cost (0.15–0.25 s of a slot's time per task on a 4-core VM): a level
+of ``n > slots`` heavy nodes of uneven cost can finish up to
+``ceil(n / slots)`` times later than one partition per node would.
 
 Deliberate scope (PARITY.md §2.A): this is a *migration on-ramp* for the
 reference's demonstrated pattern, not a general graph scheduler — big
@@ -112,39 +125,119 @@ class ScatterRef:
         return f"ScatterRef({self.rid})"
 
 
-# Worker-side placeholder for a scattered value: a Broadcast cannot be
-# pickled as RDD *data* (only closures may carry it), so payloads hold a
-# plain marker dict under this reserved key and the task closure resolves
-# it against the broadcast map it captured.  A plain dict keeps the
-# worker free of any import of this module.
+# Worker-side placeholders, resolved by the task body: a scattered value
+# (a Broadcast cannot be pickled as RDD *data*, only closures may carry
+# it, so payloads hold ``(_BC_KEY, rid)`` and the task closure resolves
+# it against the broadcast map it captured) and an in-task dependency
+# (``(_DEP_KEY, i)``: the value of the i-th node run earlier in the same
+# fused task).  Plain tuples are hashable, so both also work as set
+# members, and keep the worker free of any import of this module.
 _BC_KEY = "__dask_ssh_docker_spark_scatter__"
+_DEP_KEY = "__dask_ssh_docker_spark_dep__"
 
 
-def _substitute(obj: Any, done: dict[str, Any], bcs: dict[int, Any]) -> Any:
+def _substitute(
+    obj: Any, done: dict[str, Any], local: dict[str, int], bcs: dict[int, Any]
+) -> Any:
     if isinstance(obj, Delayed):
-        return done[obj.key]
+        i = local.get(obj.key)
+        return done[obj.key] if i is None else (_DEP_KEY, i)
     if isinstance(obj, ScatterRef):
         bcs[obj.rid] = obj.bc
-        return {_BC_KEY: obj.rid}
+        return (_BC_KEY, obj.rid)
     if isinstance(obj, list):
-        return [_substitute(v, done, bcs) for v in obj]
+        return [_substitute(v, done, local, bcs) for v in obj]
     if isinstance(obj, tuple):
-        return tuple(_substitute(v, done, bcs) for v in obj)
+        return tuple(_substitute(v, done, local, bcs) for v in obj)
     if isinstance(obj, set):
-        # the dict marker is unhashable, so inside sets a ScatterRef
-        # substitutes to the hashable tuple form instead (resolved by
-        # the same worker-side marker check)
-        out = set()
-        for v in obj:
-            if isinstance(v, ScatterRef):
-                bcs[v.rid] = v.bc
-                out.add((_BC_KEY, v.rid))
-            else:
-                out.add(_substitute(v, done, bcs))
-        return out
+        return {_substitute(v, done, local, bcs) for v in obj}
     if isinstance(obj, dict):
-        return {k: _substitute(v, done, bcs) for k, v in obj.items()}
+        return {k: _substitute(v, done, local, bcs) for k, v in obj.items()}
     return obj
+
+
+def _task_body(bmap: dict[int, Any]) -> Callable[[list], list]:
+    """The Spark task for one partition: run each of its fused tasks'
+    payloads in turn — the nodes in order, resolving markers — and
+    return every node's value, per fused task.  Nested, so cloudpickle
+    ships it by value (no import of this package on the worker);
+    ``bmap`` rides the closure, which CAN carry Broadcast handles
+    (payload data cannot)."""
+    bc_key, dep_key = _BC_KEY, _DEP_KEY
+
+    def run(blobs: list) -> list:
+        import pickle
+
+        out = []
+        for blob in blobs:
+            vals: list = []
+
+            def res(o):
+                if isinstance(o, tuple):
+                    if len(o) == 2 and isinstance(o[0], str):
+                        if o[0] == bc_key and o[1] in bmap:
+                            return bmap[o[1]].value
+                        if o[0] == dep_key and isinstance(o[1], int):
+                            return vals[o[1]]
+                    return tuple(res(v) for v in o)
+                if isinstance(o, list):
+                    return [res(v) for v in o]
+                if isinstance(o, set):
+                    return {res(v) for v in o}
+                if isinstance(o, dict):
+                    return {k: res(v) for k, v in o.items()}
+                return o
+
+            for fn, args, kwargs in pickle.loads(blob):
+                vals.append(fn(*res(args), **res(kwargs)))
+            out.append(vals)
+        return out
+
+    return run
+
+
+def _fused_levels(deps: dict[str, set[str]]) -> list[list[list[str]]]:
+    """Plan a graph of pending nodes (``deps``: node → its pending
+    dependencies) as levels of fused tasks, each task a chain of node
+    keys in run order.  Level ``i`` depends only on levels ``< i``.
+
+    A node runs in its dependency ``p``'s task when ``p`` is its only
+    pending dependency and it is ``p``'s only consumer (linear fusion).
+    Only a chain's head can depend on nodes outside the chain, so the
+    head alone sets the chain's level.  Linear time: Kahn's algorithm,
+    no recursion."""
+    consumers: dict[str, list[str]] = {k: [] for k in deps}
+    indeg = {k: len(ds) for k, ds in deps.items()}
+    for k, ds in deps.items():
+        for p in ds:
+            consumers[p].append(k)
+    order = [k for k, n in indeg.items() if not n]
+    for k in order:  # grows while iterated: Kahn's queue
+        for c in consumers[k]:
+            indeg[c] -= 1
+            if not indeg[c]:
+                order.append(c)
+    if len(order) < len(deps):  # impossible via the public API, but be loud
+        raise ValueError(
+            f"delayed graph has a cycle among: {sorted(k for k in deps if indeg[k])}"
+        )
+
+    head: dict[str, str] = {}  # node → the head of the chain that runs it
+    tasks: dict[str, list[str]] = {}  # chain head → its members, in order
+    level: dict[str, int] = {}  # chain head → its level
+    for k in order:  # every dependency is placed before its consumers
+        (p,) = deps[k] if len(deps[k]) == 1 else (None,)
+        if p is not None and len(consumers[p]) == 1:
+            head[k] = head[p]
+            tasks[head[k]].append(k)
+        else:
+            head[k] = k
+            tasks[k] = [k]
+            level[k] = 1 + max((level[head[q]] for q in deps[k]), default=-1)
+    levels: list[list[list[str]]] = [[] for _ in range(max(level.values()) + 1)]
+    for h, members in tasks.items():
+        levels[level[h]].append(members)
+    return levels
 
 
 def compute(
@@ -153,9 +246,9 @@ def compute(
     _precomputed: dict[str, Any] | None = None,
 ) -> tuple:
     """Evaluate one or more ``Delayed`` graphs; returns their values in
-    order.  Tasks with satisfied dependencies run together as one Spark
-    job per dependency layer, one task per partition, on executor Python
-    workers (tests pin worker-side execution via pid).
+    order.  Nodes run fused, one Spark job per fused level in at most
+    ``slots`` partitions, on executor Python workers (tests pin
+    worker-side execution via pid).
 
     ``_precomputed``: results keyed by node key that are already known
     (the futures layer's run-once cache) — such nodes and their whole
@@ -176,9 +269,9 @@ def _compute_graph(
     """Graph evaluation core; returns the FULL results map (every node
     computed this call plus the precomputed entries) so callers like the
     futures layer can complete dependency futures too."""
-    if spark is None:
-        from .session import get_session
+    from .session import get_session, task_slots
 
+    if spark is None:
         spark = get_session()
     sc = spark.sparkContext
 
@@ -196,67 +289,44 @@ def _compute_graph(
         stack.extend(_walk_deps(d.kwargs))
 
     deps = {
-        k: {p.key for p in (*_walk_deps(d.args), *_walk_deps(d.kwargs))}
+        k: {p.key for p in (*_walk_deps(d.args), *_walk_deps(d.kwargs))} - done.keys()
         for k, d in nodes.items()
     }
+    if not deps:
+        return done
+    slots = task_slots(sc)
 
-    pending = set(nodes)
-    while pending:
-        ready = [k for k in pending if deps[k] <= done.keys()]
-        if not ready:  # cycle: impossible via the public API, but be loud
-            raise ValueError(f"delayed graph has a cycle among: {sorted(pending)}")
-        ready.sort()  # deterministic partition order
-        # cloudpickle the payloads ourselves: RDD *data* rides the plain
-        # pickler, which can't carry lambdas/closures/test-local functions
-        # — cloudpickle serializes any callable by value, exactly like
-        # dask ships tasks to workers
-        from pyspark import cloudpickle
+    # cloudpickle the payloads ourselves: RDD *data* rides the plain
+    # pickler, which can't carry lambdas/closures/test-local functions
+    # — cloudpickle serializes any callable by value, exactly like dask
+    # ships tasks to workers
+    from pyspark import cloudpickle
 
-        bcs: dict[int, Any] = {}  # broadcasts used by this layer's tasks
-        payloads = [
-            cloudpickle.dumps(
-                (
-                    nodes[k].fn,
-                    _substitute(list(nodes[k].args), done, bcs),
-                    _substitute(nodes[k].kwargs, done, bcs),
+    for tasks in _fused_levels(deps):
+        bcs: dict[int, Any] = {}  # broadcasts used by this level's tasks
+        payloads = []
+        for members in tasks:
+            local = {k: i for i, k in enumerate(members)}
+            payloads.append(
+                cloudpickle.dumps(
+                    [
+                        (
+                            nodes[k].fn,
+                            _substitute(list(nodes[k].args), done, local, bcs),
+                            _substitute(nodes[k].kwargs, done, local, bcs),
+                        )
+                        for k in members
+                    ]
                 )
             )
-            for k in ready
-        ]
-        bmap = bcs  # captured by the closure serializer, which CAN carry
-        # Broadcast handles (payload data cannot); workers resolve markers
-        # against it and read each value from the local broadcast block
-        bc_key = _BC_KEY
-
-        def _exec(blob):  # nested → cloudpickled by value, no module
-            import pickle  # import needed on the worker
-
-            def res(o):
-                if isinstance(o, dict):
-                    if len(o) == 1 and bc_key in o:
-                        return bmap[o[bc_key]].value
-                    return {k: res(v) for k, v in o.items()}
-                if isinstance(o, list):
-                    return [res(v) for v in o]
-                if isinstance(o, tuple):
-                    # hashable scatter marker (set members): (key, rid)
-                    if (
-                        len(o) == 2
-                        and o[0] == bc_key
-                        and isinstance(o[1], int)
-                        and o[1] in bmap
-                    ):
-                        return bmap[o[1]].value
-                    return tuple(res(v) for v in o)
-                if isinstance(o, set):
-                    return {res(v) for v in o}
-                return o
-
-            fn, args, kwargs = pickle.loads(blob)
-            return fn(*res(args), **res(kwargs))
-
-        results = sc.parallelize(payloads, len(payloads)).map(_exec).collect()
-        done.update(zip(ready, results))
-        pending.difference_update(ready)
+        # deal the tasks round-robin: partition r runs tasks r, r+n, …
+        n = min(len(payloads), slots)
+        results = (
+            sc.parallelize([payloads[r::n] for r in range(n)], n)
+            .map(_task_body(bcs))
+            .collect()
+        )
+        for i, members in enumerate(tasks):
+            done.update(zip(members, results[i % n][i // n]))
 
     return done

@@ -4,14 +4,15 @@ The reference registers a default Dask ``Client`` for every launched
 cluster (``bin/dask-ssh-docker:77-78``), giving scripts the
 ``client.submit`` / ``client.map`` / ``client.scatter`` /
 ``client.gather`` vocabulary.  This module gives a migrating user those
-exact call shapes, executed by the same layered-DAG machinery as
-:mod:`.delayed` — every task runs in Spark's Python workers, siblings in
-one Spark job per dependency layer:
+exact call shapes, executed by the fused scheduler of :mod:`.delayed` —
+every task runs in Spark's Python workers, one Spark job per fused level
+in at most ``slots`` partitions, with every task's value returned:
 
 - ``submit(fn, *args)`` → a :class:`Future`; arguments may be other
   ``Future``/``Delayed`` values (chaining) or scattered data.
 - ``map(fn, *iterables)`` → a list of futures, one per element — the
-  whole wave executes as ONE Spark job when gathered.
+  whole wave executes as ONE Spark job of at most ``slots`` tasks when
+  gathered.
 - ``scatter(x)`` → ships ``x`` to the cluster ONCE as a Spark broadcast
   and returns a reference usable as a task argument (torrent-style
   distribution, never per-task payload copies).
@@ -30,7 +31,7 @@ Laziness contract: ``submit`` records the task and returns immediately
 (like dask's non-blocking submit); execution happens at the first
 ``result()``/``gather()`` touching the future.  Batching work into
 ``gather`` is both the dask idiom for throughput and the Spark-friendly
-shape (one job per layer instead of one per task).
+shape (one job per fused level instead of one per task).
 """
 
 from __future__ import annotations
@@ -139,7 +140,8 @@ class Client:
     def map(self, fn: Callable, *iterables: Iterable, **kwargs: Any) -> list[Future]:
         """One future per zipped element of ``iterables`` (the
         ``client.map(func, seq)`` idiom).  Gathering the returned list
-        runs the whole wave as one Spark job."""
+        runs the whole wave as one Spark job packed into at most
+        ``slots`` partitions."""
         return [self.submit(fn, *vals, **kwargs) for vals in zip(*iterables)]
 
     # -- data movement -----------------------------------------------------
@@ -156,7 +158,9 @@ class Client:
     def gather(self, futures: Any) -> Any:
         """Values for (nested containers of) futures, computing every
         pending one in a single batched graph evaluation — one Spark job
-        per dependency layer across ALL of them."""
+        per fused level across ALL of them, in at most ``slots``
+        partitions.  Every node's value comes back, so dependency
+        futures complete too."""
         pending: list[Future] = []
         seen: set[int] = set()
 

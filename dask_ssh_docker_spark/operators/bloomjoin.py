@@ -59,10 +59,13 @@ def _bitmap_array_frame(bitmap: DataFrame, m_bits: int) -> DataFrame:
     """ONE-row frame ``(__bm: array<bigint>)`` — the dense bitmap, folded
     from the (word, bits) rows by a global aggregate.  Absent words are 0
     (no bits set ⇒ probe misses ⇒ definitely-absent, exactly the
-    inner-join-drop / left-join-NULL semantics of the join form).  A
-    global aggregate is bounded by construction (exactly one row), so
-    the broadcast hint downstream is legal without a materialization
-    job (the policy sweep exempts global aggregates)."""
+    inner-join-drop / left-join-NULL semantics of the join form);
+    ``try_element_at`` makes that lookup NULL for an absent word
+    whatever the Spark version's ANSI map-access rule (4.1 already
+    returns NULL under ANSI).  A global aggregate is bounded by
+    construction (exactly one row), so the broadcast hint downstream is
+    legal without a materialization job (the policy sweep exempts global
+    aggregates)."""
     nwords = (m_bits + 63) // 64
     m = F.map_from_entries(
         F.collect_list(F.struct(F.col("word").cast("int"), F.col("bits")))
@@ -71,7 +74,7 @@ def _bitmap_array_frame(bitmap: DataFrame, m_bits: int) -> DataFrame:
         F.transform(
             F.sequence(F.lit(0), F.lit(nwords - 1)),
             lambda w: F.coalesce(
-                F.element_at(F.col("__m"), w), F.lit(0).cast("bigint")
+                F.try_element_at(F.col("__m"), w), F.lit(0).cast("bigint")
             ),
         ).alias("__bm")
     )

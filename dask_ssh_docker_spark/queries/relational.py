@@ -620,7 +620,8 @@ def smoke_delayed_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def delayed_api_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both reference smoke workloads run through the REAL imperative
     ``delayed`` API (``dask_ssh_docker_spark.delayed`` — task payloads
-    cloudpickled onto Spark workers, one job per dependency layer):
+    cloudpickled onto Spark workers, one job per fused level in at most
+    ``slots`` partitions, every node's value returned):
     ``delayed(sum)(range(1000))`` (= ``/root/reference/example/test.py:23``)
     and ``delayed(func)(range(100))`` with the custom-image ``func``
     (``/root/reference/example/custom_image/my_library.py``), the list

@@ -171,6 +171,16 @@ def get_session(
     return builder.getOrCreate()
 
 
+def task_slots(sc) -> int:
+    """How many tasks the session's cluster runs at once.  A local
+    master's thread count is read from Spark's own local scheduler, which
+    already resolved ``local[*]`` against the processors the JVM may use;
+    any other master gives ``sc.defaultParallelism``."""
+    if sc.master == "local" or sc.master.startswith("local["):
+        return sc._jsc.sc().schedulerBackend().totalCores()
+    return sc.defaultParallelism
+
+
 def stop_session() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:

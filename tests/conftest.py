@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
+from types import SimpleNamespace
 
 import pytest
 
@@ -21,3 +24,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def spark_work(spark):
+    """``with spark_work() as w: ...`` — afterwards ``w.jobs`` / ``w.tasks``
+    count the Spark jobs and tasks the block launched, read from
+    ``sc.statusTracker()`` under a fresh job group."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def count():
+        group = f"spark-work-{uuid.uuid4().hex}"
+        work = SimpleNamespace(jobs=0, tasks=0)
+        sc.setJobGroup(group, group)
+        try:
+            yield work
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        ids = st.getJobIdsForGroup(group)
+        work.jobs = len(ids)
+        work.tasks = sum(
+            st.getStageInfo(s).numTasks for j in ids for s in st.getJobInfo(j).stageIds
+        )
+
+    return count

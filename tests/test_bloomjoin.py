@@ -97,3 +97,25 @@ def test_awkward_column_names(spark):
         "left_anti",
     )
     assert {r[0] for r in anti.collect()} == {r[0] for r in plain.collect()}
+
+
+def test_dense_bitmap_absent_words_zero_under_ansi(spark):
+    # the dense fold reads absent words from a map; under ANSI mode that
+    # lookup must still yield 0, never raise
+    from dask_ssh_docker_spark.operators.bloomjoin import _bitmap_array_frame
+
+    build = spark.range(0, 3).select((F.col("id") * 7).alias("k"))
+    probe = spark.range(0, 50).select(F.col("id").alias("k"))
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        bm = bloom_bitmap(build, "k", m_bits=4096)
+        words = {r["word"]: r["bits"] for r in bm.collect()}
+        (dense,) = _bitmap_array_frame(bm, 4096).collect()[0]
+        semi = {r["k"] for r in bloom_semi_join(probe, build, "k", "k", 4096).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert len(dense) == 4096 // 64
+    assert len(words) < len(dense)  # some words are absent
+    assert dense == [words.get(w, 0) for w in range(len(dense))]
+    assert semi == {0, 7, 14}

@@ -8,7 +8,7 @@ import os
 import pytest
 
 from dask_ssh_docker_spark.delayed import Delayed, compute, delayed
-from dask_ssh_docker_spark.session import master_from_hosts, parse_hosts
+from dask_ssh_docker_spark.session import master_from_hosts, parse_hosts, task_slots
 
 
 def test_reference_smoke_sum(spark):
@@ -117,3 +117,104 @@ def test_scatter_ref_inside_set_argument(spark):
     ref = client.scatter(7)
     f = client.submit(lambda s: sum(s), {ref, 1, 2})  # noqa: E731
     assert f.result() == 10
+
+
+# --- fused scheduling: jobs and tasks per graph ---
+
+
+def test_chain_runs_as_one_task(spark, spark_work):
+    node = delayed(_inc)(delayed(_inc)(delayed(_inc)(0)))
+    with spark_work() as w:
+        assert node.compute(spark) == 3
+    assert (w.jobs, w.tasks) == (1, 1)
+
+
+def test_long_chain_one_job_no_recursion(spark, spark_work):
+    # Kahn ordering and iterative levels: no per-node job, no RecursionError
+    node = delayed(_inc)(0)
+    for _ in range(4999):
+        node = delayed(_inc)(node)
+    with spark_work() as w:
+        assert node.compute(spark) == 5000
+    assert (w.jobs, w.tasks) == (1, 1)
+
+
+def test_wide_map_packs_each_level(spark, spark_work):
+    # 16 -> 4 -> 1: no node has a sole dependency, so nothing fuses; each
+    # level is one job of at most `slots` tasks
+    slots = task_slots(spark.sparkContext)
+    incs = [delayed(_inc)(i) for i in range(16)]
+    sums = [delayed(sum)(incs[i : i + 4]) for i in range(0, 16, 4)]
+    total = delayed(sum)(sums)
+    with spark_work() as w:
+        assert total.compute(spark) == sum(range(1, 17))
+    assert (w.jobs, w.tasks) == (3, min(16, slots) + min(4, slots) + 1)
+
+
+def test_packed_level_deals_tasks_round_robin(spark):
+    # 3 * slots sibling tasks share `slots` partitions round-robin: any
+    # `slots` neighbours land on distinct partitions, and every value
+    # still reaches its consumer in place
+    def where(i):
+        from pyspark import TaskContext
+
+        return i, TaskContext.get().partitionId()
+
+    slots = task_slots(spark.sparkContext)
+    leaves = [delayed(where)(i) for i in range(3 * slots)]
+    got = delayed(list)(leaves).compute(spark)
+    assert [i for i, _ in got] == list(range(3 * slots))
+    parts = [p for _, p in got]
+    for k in range(2 * slots + 1):
+        assert sorted(parts[k : k + slots]) == list(range(slots))
+
+
+def test_shared_dependency_is_not_fused_and_runs_once(spark, spark_work):
+    runs = spark.sparkContext.accumulator(0)
+
+    def tag(_):
+        import os as _os
+        import uuid as _uuid
+
+        runs.add(1)
+        return _os.getpid(), _uuid.uuid4().hex
+
+    a = delayed(tag)(0)
+    b, c = delayed(lambda t: t)(a), delayed(lambda t: t)(a)  # noqa: E731
+    d = delayed(lambda x, y: (x, y))(b, c)  # noqa: E731
+    with spark_work() as w:
+        x, y = d.compute(spark)
+    assert x == y  # one execution's (pid, uuid) reached both consumers
+    assert runs.value == 1
+    assert x[0] != os.getpid()
+    # `a` has two consumers, so it runs in its own job ahead of them
+    assert w.jobs == 3
+
+
+def test_fused_deps_in_containers_beside_scatter(spark, spark_work):
+    # the in-task dependency marker must resolve inside list, tuple, dict
+    # and set arguments (set members need the hashable form), next to a
+    # scattered value's marker, all in one fused task
+    from dask_ssh_docker_spark.futures import Client
+
+    ref = Client(spark).scatter(100)
+    a = delayed(_inc)(1)
+    out = delayed(lambda *xs: xs)(  # noqa: E731
+        [a, ref], (a, ref), {"a": a, "r": ref}, {a, ref}
+    )
+    with spark_work() as w:
+        got = out.compute(spark)
+    assert got == ([2, 100], (2, 100), {"a": 2, "r": 100}, {2, 100})
+    assert (w.jobs, w.tasks) == (1, 1)
+
+
+def test_task_slots_follow_the_master(spark):
+    class _SC:
+        master = "spark://m:7077"
+        defaultParallelism = 7
+
+    # the conftest session is local[N]: N threads, whatever the
+    # shuffle-sized spark.default.parallelism says
+    n = int(spark.sparkContext.master[len("local[") : -1])
+    assert task_slots(spark.sparkContext) == n
+    assert task_slots(_SC()) == 7

@@ -112,3 +112,27 @@ def test_gather_set_of_futures(client):
     got = client.gather({f1, f2, 99})
     assert got == {11, 21, 99}
     assert not any(isinstance(v, Future) for v in got)
+
+
+def test_map_wave_is_one_job_within_slots(spark, client, spark_work):
+    from dask_ssh_docker_spark.session import task_slots
+
+    futs = client.map(_inc, range(8))
+    with spark_work() as w:
+        assert client.gather(futs) == list(range(1, 9))
+    assert w.jobs == 1
+    assert 1 <= w.tasks <= task_slots(spark.sparkContext)
+
+
+def test_dependency_future_done_after_downstream_gather(client, spark_work):
+    # the dependency runs inside its consumer's task, yet completes its
+    # own future: a.result() is served from the run-once cache
+    a = client.submit(_inc, 1)
+    b = client.submit(_inc, a)
+    with spark_work() as w:
+        assert client.gather(b) == 3
+    assert (w.jobs, w.tasks) == (1, 1)
+    assert a.done()
+    with spark_work() as w:
+        assert a.result() == 2
+    assert w.jobs == 0
