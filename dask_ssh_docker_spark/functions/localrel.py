@@ -22,12 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """Bounded ``rows`` (list of tuples/Rows) + ``schema`` (StructType or
-    DDL string) → a ``LocalRelation``-backed DataFrame.
-
-    Falls back to the plain list path only when pandas is unavailable
-    (never on the bench/driver images) or the frame is empty-with-DDL
-    (pandas needs column names, which a DDL string provides via Spark's
-    own parser anyway)."""
+    DDL string) → a ``LocalRelation``-backed DataFrame, always through
+    pandas/Arrow.  Field names must be unique: rows are split into
+    columns by name."""
     import pandas as pd
     from pyspark.sql.types import StructType, _parse_datatype_string
 
@@ -35,6 +32,8 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         schema = _parse_datatype_string(schema)
     assert isinstance(schema, StructType), "schema must be a struct"
     names = [f.name for f in schema.fields]
+    if len(set(names)) != len(names):
+        raise ValueError(f"local_frame: duplicate field names in {names}")
     rows = list(rows)
     data = {n: [r[i] for r in rows] for i, n in enumerate(names)}
     pdf = pd.DataFrame(data, columns=names, dtype=object)

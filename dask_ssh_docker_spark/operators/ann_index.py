@@ -1,8 +1,9 @@
 """Persisted ANN index (VERDICT r11 item 4): save/load for the IVF-PQ
-and LSH indexes so fit-once/probe-many is real ACROSS sessions, not just
-within one (``tools/ivfpq_split_probe.py`` measured the within-session
-split: fit 15.9 s at 200k vectors vs 1.37 s warm probe — without
-persistence every new session pays the fit again).
+and LSH indexes so fit-once/probe-many holds ACROSS sessions.  The fit
+costs an order of magnitude more than a probe (BENCH_NOTES r11: fit
+15.9 s vs 1.37 s warm probe at 200k vectors); a fresh session that loads
+the index pays a load of seconds, never the fit (BENCH_NOTES r13: 6.4 s
+cold load of a grown 200k-vector index).
 
 Layout (all Spark parquet writes — works on any Hadoop-FS path: local,
 HDFS, S3):
@@ -34,10 +35,12 @@ pair instead of mis-probing.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .ivfpq import IVFPQModel, coarse_k_for, encode_ivfpq, ivfpq_topk
 
 FORMAT_VERSION = 1
 
@@ -75,12 +78,8 @@ def _read_meta(spark: SparkSession, path: str, kind: str) -> dict:
 
 @dataclass(frozen=True)
 class IvfPqIndex:
-    centroids: DataFrame
-    codebooks: DataFrame
+    model: IVFPQModel
     index: DataFrame  # (centroid_id, <id_col>, codes)
-    m: int
-    dim: int
-    k_coarse: int
     id_col: str
     #: corpus size the centroids were trained on (None for pre-r13 indexes)
     fitted_rows: int | None = None
@@ -88,13 +87,9 @@ class IvfPqIndex:
 
 def save_ivfpq_index(
     path: str,
-    centroids: DataFrame,
-    codebooks: DataFrame,
+    model: IVFPQModel,
     index: DataFrame,
     *,
-    m: int,
-    dim: int,
-    k_coarse: int,
     id_col: str = "vec_id",
     fitted_rows: int | None = None,
 ) -> None:
@@ -105,23 +100,30 @@ def save_ivfpq_index(
     ``fitted_rows``: corpus size the centroids were TRAINED on — recorded
     in meta so ``refit_recommended`` can judge staleness after appends.
     When omitted it is read back from the just-written codes parquet
-    (a footer-metadata count, no data scan)."""
-    spark = centroids.sparkSession
-    centroids.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    codebooks.coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    (a footer-metadata count, no data scan).  Meta still records m, dim
+    and k_coarse — read from the model's tensors — so the layout stays
+    at ``FORMAT_VERSION``."""
+    spark = index.sparkSession
+    model.ivf.frame(spark).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/centroids"
+    )
+    model.pq.frame(spark).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/codebooks"
+    )
     index.write.mode("overwrite").partitionBy("centroid_id").parquet(
         f"{path}/codes"
     )
     if fitted_rows is None:
         fitted_rows = spark.read.parquet(f"{path}/codes").count()
+    m, _, subdim = model.pq.codebooks.shape
     _write_meta(
         spark,
         path,
         "ivfpq",
         {
             "m": m,
-            "dim": dim,
-            "k_coarse": k_coarse,
+            "dim": m * subdim,
+            "k_coarse": len(model.ivf.C),
             "id_col": id_col,
             "fitted_rows": int(fitted_rows),
         },
@@ -129,19 +131,19 @@ def save_ivfpq_index(
 
 
 def load_ivfpq_index(spark: SparkSession, path: str) -> IvfPqIndex:
-    """Load a persisted IVF-PQ index for probing.  The codes frame keeps
+    """Load a persisted IVF-PQ index for probing.  The trained tensors
+    cost one bounded collect each; the codes frame stays lazy and keeps
     its ``centroid_id`` partition column — an ``isin(probe_ids)`` filter
     on it prunes at the parquet-partition level, so a probe reads
     nprobe/k_coarse of the on-disk index, never all of it."""
     params = _read_meta(spark, path, "ivfpq")
     fitted = params.get("fitted_rows")
     return IvfPqIndex(
-        centroids=spark.read.parquet(f"{path}/centroids"),
-        codebooks=spark.read.parquet(f"{path}/codebooks"),
+        model=IVFPQModel.from_frames(
+            spark.read.parquet(f"{path}/centroids"),
+            spark.read.parquet(f"{path}/codebooks"),
+        ),
         index=spark.read.parquet(f"{path}/codes"),
-        m=int(params["m"]),
-        dim=int(params["dim"]),
-        k_coarse=int(params["k_coarse"]),
         id_col=str(params["id_col"]),
         fitted_rows=int(fitted) if fitted is not None else None,
     )
@@ -165,30 +167,20 @@ def append_ivfpq_index(
     centroids), so probe correctness degrades only through (a) residual
     quantization error growing as the corpus drifts from the trained
     distribution and (b) list occupancy n/k drifting past the ⌈√n⌉ cost
-    law.  Both are measured in ``tools/ann_index_probe.py --grown``
-    (BENCH_NOTES r13); check ``refit_recommended`` after appends and
-    refit when it fires.  Returns the reloaded index."""
-    from .ivfpq import encode_ivfpq
-
+    law.  At 2× growth BENCH_NOTES r13 measured no recall loss from
+    (a); check ``refit_recommended`` after appends and refit when it
+    fires.  Returns the grown index (same model, re-read codes)."""
     idx = load_ivfpq_index(spark, path)
-    codes = encode_ivfpq(
-        new_vectors,
-        idx.centroids,
-        idx.codebooks,
-        id_col=idx.id_col,
-        vec_col=vec_col,
-        m=idx.m,
-        dim=idx.dim,
-    )
+    codes = encode_ivfpq(new_vectors, idx.model, id_col=idx.id_col, vec_col=vec_col)
     codes.write.mode("append").partitionBy("centroid_id").parquet(f"{path}/codes")
-    return load_ivfpq_index(spark, path)
+    return replace(idx, index=spark.read.parquet(f"{path}/codes"))
 
 
 #: ``refit_recommended`` fires when ⌈√n_now⌉ exceeds this multiple of the
 #: fitted k_coarse — i.e. when the corpus has grown past ~factor² × the
 #: fitted size and the ⌈√n⌉ sizing law (coarse_k_for) has drifted >2×.
-#: Measured basis (tools/ann_index_probe.py --grown, BENCH_NOTES r13):
-#: at 2× growth on stale centroids recall@10 holds (the encode step still
+#: Measured basis (BENCH_NOTES r13, 100k→200k appends at sf10): at 2×
+#: growth on stale centroids recall@10 holds (the encode step still
 #: assigns true nearest lists), while ADC scan cost per probe grows
 #: linearly with occupancy n/k — so the trigger is COST-driven at 4×
 #: growth, before recall decay becomes the binding constraint.
@@ -201,15 +193,14 @@ def refit_recommended(
     factor: float = REFIT_DRIFT_FACTOR,
 ) -> bool:
     """True when the corpus has outgrown the fitted coarse quantizer:
-    ``coarse_k_for(current_rows) > factor * k_coarse``.  With the ⌈√n⌉
-    law this fires at ~factor²× the fitted corpus (4× at the default),
-    and never fires below the validation floor where k is pinned.
+    ``coarse_k_for(current_rows) > factor * k_coarse``, with k_coarse
+    the model's centroid count.  With the ⌈√n⌉ law this fires at
+    ~factor²× the fitted corpus (4× at the default), and never fires
+    below the validation floor where k is pinned.
     ``current_rows`` defaults to a count of the index frame — on a loaded
     index that is a parquet footer-metadata count, not a data scan."""
-    from .ivfpq import coarse_k_for
-
     n = current_rows if current_rows is not None else idx.index.count()
-    return coarse_k_for(n) > factor * idx.k_coarse
+    return coarse_k_for(n) > factor * len(idx.model.ivf.C)
 
 
 def ivfpq_probe(
@@ -225,13 +216,10 @@ def ivfpq_probe(
 ) -> DataFrame:
     """Probe a loaded index — same contract as ``ivfpq_topk`` with the
     trained artifacts supplied by ``load_ivfpq_index``."""
-    from .ivfpq import ivfpq_topk
-
     return ivfpq_topk(
         queries,
         idx.index,
-        idx.centroids,
-        idx.codebooks,
+        idx.model,
         corpus=corpus,
         k=k,
         nprobe=nprobe,
@@ -240,8 +228,6 @@ def ivfpq_probe(
         query_vec=query_vec,
         id_col=idx.id_col,
         vec_col=vec_col,
-        m=idx.m,
-        dim=idx.dim,
     )
 
 

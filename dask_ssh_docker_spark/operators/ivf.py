@@ -3,10 +3,10 @@
 
 Classic IVF-Flat, DataFrame-first and fully deterministic:
 
-1. **train**: k coarse centroids by Lloyd iterations — assignment is a
-   broadcast cross-score (centroids are tiny), update is a groupBy mean.
-   Seeded deterministic init (first k vectors by id); each iteration is
-   one shuffle of (cluster, vector) partial sums.
+1. **train**: k coarse centroids by Lloyd iterations — each iteration is
+   one Arrow map pass that assigns vectors and emits per-partition
+   (count, sum) partials, reduced on the driver; no shuffle.  Seeded
+   deterministic init (first k vectors by id).
 2. **index**: every vector assigned to its nearest centroid —
    (centroid_id, vec_id, embedding) — in production this is written
    partitioned by ``centroid_id`` so a probe reads only its partitions.
@@ -14,26 +14,42 @@ Classic IVF-Flat, DataFrame-first and fully deterministic:
    lists, exact-rank only vectors in those lists.  Scan fraction ≈
    nprobe/k of the corpus vs 1.0 for brute force.
 
-All vector math is JVM higher-order functions (no Python in the scoring
-path); the Python loop only orchestrates Lloyd iterations (bounded, each
-a persisted DataFrame job — lineage cut per round).
+Trained state is an :class:`IVFModel` holding the ``(k, dim)`` centroid
+matrix on the driver; assignment closes over it in Arrow map passes and
+search broadcasts it as a local relation.  Candidate scoring is JVM
+higher-order functions (no Python in the scoring path).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from dataclasses import dataclass
+
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.localrel import local_frame
 from ..functions.vector import cosine_similarity
+from .pq import _nearest_rows, _rows_tensor, _sub_sq_dist, _tensor_rows
 
 
-def _sq_dist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+@dataclass(frozen=True, eq=False)
+class IVFModel:
+    """Trained coarse quantizer: ``C[centroid_id]`` is one centroid,
+    shape ``(k, dim)``."""
+
+    C: np.ndarray
+
+    @classmethod
+    def from_frames(cls, centroids: DataFrame) -> IVFModel:
+        """One bounded collect of a ``(centroid_id, centroid)`` frame."""
+        return cls(_rows_tensor(centroids.select("centroid_id", "centroid").collect()))
+
+    def frame(self, spark: SparkSession) -> DataFrame:
+        """The centroids as a ``(centroid_id, centroid)`` local relation."""
+        return local_frame(
+            spark, _tensor_rows(self.C), "centroid_id int, centroid array<double>"
+        )
 
 
 def train_centroids(
@@ -45,9 +61,9 @@ def train_centroids(
     sample_fraction: float | None = None,
     seed: int = 20260813,
     init_centroids=None,
-) -> DataFrame:
-    """(centroid_id, centroid: array<double>) — Lloyd's with deterministic
-    init (first k vectors by id).
+) -> IVFModel:
+    """k coarse centroids by Lloyd's with deterministic init (first k
+    vectors by id).
 
     ``sample_fraction``: train on a seeded Bernoulli sample of the corpus
     instead of every row — the 100 TB path (SCALE.md): k-means quality
@@ -70,8 +86,6 @@ def train_centroids(
     top-k corpus pass; values must equal what the collect below would
     return, so the trained centroids are bit-identical either way (pinned
     in tests/test_ivfpq.py)."""
-    import numpy as np
-
     if sample_fraction is not None:
         if not (0.0 < sample_fraction <= 1.0):
             raise ValueError("sample_fraction must be in (0, 1]")
@@ -119,24 +133,7 @@ def train_centroids(
             C = np.where(nonempty[:, None], sums / np.where(nonempty, counts, 1.0)[:, None], C)
     finally:
         vecs.unpersist()
-    spark = corpus.sparkSession
-    # LocalRelation (r14, functions/localrel.py): the list-backed frame
-    # scanned as a parallelized RDD wherever it is consumed as a frame
-    # (sim_topk_ivf broadcast-crossJoins it); the Arrow local relation is
-    # job-free and carries exact size statistics.
-    out = local_frame(
-        spark,
-        [(i, [float(x) for x in C[i]]) for i in range(len(C))],
-        "centroid_id int, centroid array<double>",
-    )
-    # Driver-side tensor attach (r13 optimization round, guide §5): the
-    # centroid matrix was just computed HERE — hand it to downstream
-    # consumers (assignment, encode, LUT build) as an attribute so they
-    # skip a synchronous collect job each.  The DataFrame stays the API
-    # (and the persisted/loaded-index path still collects); values are
-    # bit-identical — float64 survives the createDataFrame round-trip.
-    out._graft_np_centroids = np.ascontiguousarray(C, dtype=np.float64)
-    return out
+    return IVFModel(C)
 
 
 def _partial_sums(vecs: DataFrame, C) -> DataFrame:
@@ -145,9 +142,6 @@ def _partial_sums(vecs: DataFrame, C) -> DataFrame:
     train on ``sample_fraction`` (bounded partitions) so the driver-side
     reduce stays small; the partials themselves are the map-side-combine
     this update needs, computed in the SAME pass as the assignment."""
-    import numpy as np
-
-    from .pq import _nearest_rows
 
     def go(batches):
         import pandas as pd
@@ -176,27 +170,14 @@ def _partial_sums(vecs: DataFrame, C) -> DataFrame:
     return vecs.mapInPandas(go, schema="cid int, n double, s array<double>")
 
 
-def _assign(vecs: DataFrame, cents: DataFrame, keep_vec: bool = False) -> DataFrame:
+def _assign(vecs: DataFrame, model: IVFModel, keep_vec: bool = False) -> DataFrame:
     """(id, centroid_id[, v]): nearest centroid per vector — ONE Arrow
-    map pass closing over the collected centroid matrix (bounded k rows;
-    ``cents`` is always materialized upstream, so the collect is a cheap
-    local fetch).  Replaces the broadcast crossJoin + interpreted
-    higher-order distance fold + per-id argmin window: zero shuffle,
+    map pass closing over the model's centroid matrix: zero shuffle,
     chunked-GEMM math (``pq._nearest_rows``) — the same interpreted-HOF
     →Arrow rewrite as the LSH bucket pass (PLANS.md), measured ~10× on
     the sf1 Lloyd loop.  ``keep_vec`` passes the vector through so the
-    training update needs no join back."""
-    import numpy as np
-
-    from .pq import _nearest_rows
-
-    C = getattr(cents, "_graft_np_centroids", None)
-    if C is None:  # e.g. centroids re-read from a persisted index
-        rows = cents.collect()
-        dim = len(rows[0]["centroid"])
-        C = np.zeros((max(r["centroid_id"] for r in rows) + 1, dim))
-        for r in rows:
-            C[r["centroid_id"]] = r["centroid"]
+    caller needs no join back."""
+    C = model.C
     id_t = vecs.schema["id"].dataType.simpleString()
     v_t = vecs.schema["v"].dataType.simpleString()
 
@@ -218,7 +199,7 @@ def _assign(vecs: DataFrame, cents: DataFrame, keep_vec: bool = False) -> DataFr
 
 def build_index(
     corpus: DataFrame,
-    centroids: DataFrame,
+    model: IVFModel,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -226,7 +207,7 @@ def build_index(
     partitioned by centroid_id so probes scan only their lists."""
     vecs = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     return (
-        _assign(vecs, centroids)
+        _assign(vecs, model)
         .join(vecs, "id")
         .select("centroid_id", F.col("id").alias(id_col), F.col("v").alias(vec_col))
     )
@@ -235,7 +216,7 @@ def build_index(
 def ivf_topk(
     queries: DataFrame,
     index: DataFrame,
-    centroids: DataFrame,
+    model: IVFModel,
     k: int = 10,
     nprobe: int = 4,
     query_id: str = "query_id",
@@ -245,11 +226,14 @@ def ivf_topk(
     """Top-k cosine neighbors probing only the ``nprobe`` nearest inverted
     lists per query."""
     q = queries.select(F.col(query_id), F.col(vec_col).alias("__qv"))
+    centroids = model.frame(queries.sparkSession)
     qc = q.crossJoin(F.broadcast(centroids)).select(
         query_id,
         "__qv",
         "centroid_id",
-        _sq_dist(F.transform("__qv", lambda x: x.cast("double")), F.col("centroid")).alias("d"),
+        _sub_sq_dist(
+            F.transform("__qv", lambda x: x.cast("double")), F.col("centroid")
+        ).alias("d"),
     )
     w = Window.partitionBy(query_id).orderBy(F.asc("d"), F.asc("centroid_id"))
     probes = (

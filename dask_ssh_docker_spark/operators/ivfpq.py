@@ -15,23 +15,23 @@ the raw vector — residual energy is far smaller than vector energy, so
 the same ks sub-centroids quantize much more finely (the classic IVFADC
 accuracy win over raw-vector PQ at equal bytes).
 
-DataFrame shapes:
+Shapes:
 
-- **train**: coarse centroids via the existing distributed Lloyd
+- **train**: coarse centroids via the distributed Lloyd
   (``ivf.train_centroids``); residual codebooks driver-side on a bounded
   deterministic sample (same faiss-standard posture, rationale and
-  helper shared with ``pq.train_pq_codebooks``).
+  helper as ``pq.train_pq_codebooks``).  The result is one
+  :class:`IVFPQModel`: both tensors, held on the driver.
 - **encode**: ONE Arrow-batched ``mapInPandas`` pass — per batch numpy
   computes coarse assignment, residual, and all m sub-codes; zero
   shuffle; emits ``(centroid_id, vec_id, codes)``.  In production this
   frame is written partitioned by ``centroid_id`` so probes read only
   their inverted lists.
-- **search**: per-query probe selection + per-(query, probe) residual
-  LUTs in one ``mapInPandas`` over the (small) query frame, closing over
-  the collected centroids/codebooks (KBs); the bounded LUT frame is
-  materialized then broadcast-joined to the code index on
-  ``centroid_id`` — with centroid-partitioned lists this is a pruned
-  scan, never a full-index pass; ADC score is a map-side fold of each
+- **search**: probe selection + per-(query, probe) residual LUTs run
+  driver-side over the bounded query frame; the LUT frame is a local
+  relation broadcast-joined to the code index on ``centroid_id`` after
+  an ``isin`` filter to the probed lists (a pruned scan on a
+  centroid-partitioned index); ADC score is a map-side fold of each
   code array into its LUT; one final per-query rank window; optional
   exact re-rank of the ``k·expand`` shortlist against raw vectors
   fetched by id.
@@ -42,18 +42,38 @@ argmin/rank ties broken on lowest cid / vec_id.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.localrel import local_frame
-from .ivf import train_centroids
+from .ivf import IVFModel, train_centroids
 from .pq import (
-    _codebook_tensors,
-    _kmeans_subspace_rows,
+    PQModel,
+    _adc_dist,
+    _exact_rerank,
+    _kmeans_subspaces,
     _nearest_rows,
-    _sub_sq_dist,
     _subspace_codes,
+    _train_sample,
 )
+
+
+@dataclass(frozen=True, eq=False)
+class IVFPQModel:
+    """Trained IVF-PQ state: the coarse quantizer and the residual
+    codebooks."""
+
+    ivf: IVFModel
+    pq: PQModel
+
+    @classmethod
+    def from_frames(cls, centroids: DataFrame, codebooks: DataFrame) -> IVFPQModel:
+        """Two bounded collects: ``(centroid_id, centroid)`` and
+        ``(sub, cid, centroid)``."""
+        return cls(IVFModel.from_frames(centroids), PQModel.from_frames(codebooks))
 
 
 def coarse_k_for(n_rows: int, floor_rows: int = 16_384, floor_k: int = 16) -> int:
@@ -90,7 +110,7 @@ def coarse_k_for(n_rows: int, floor_rows: int = 16_384, floor_k: int = 16) -> in
 def probe_scan_rows(
     queries: DataFrame,
     index: DataFrame,
-    centroids: DataFrame,
+    model: IVFModel,
     nprobe: int,
     query_id: str = "query_id",
     query_vec: str = "query_vec",
@@ -99,12 +119,7 @@ def probe_scan_rows(
     deterministic cost metric behind the ``coarse_k_for`` law (sum over
     queries of the probed lists' occupancies).  Driver-side probe
     selection mirrors ``ivfpq_topk``'s (same argsort tie-break)."""
-    import numpy as np
-
-    c_rows = centroids.collect()
-    C = np.zeros((max(r["centroid_id"] for r in c_rows) + 1, len(c_rows[0]["centroid"])))
-    for r in c_rows:
-        C[r["centroid_id"]] = r["centroid"]
+    C = model.C
     occupancy = {
         r["centroid_id"]: r["cnt"]
         for r in index.groupBy("centroid_id").agg(F.count("*").alias("cnt")).collect()
@@ -126,39 +141,21 @@ def train_ivfpq(
     coarse_iters: int = 2,
     m: int = 8,
     ks: int = 16,
-    dim: int = 64,
     pq_iters: int = 3,
     sample_max: int = 100_000,
     coarse_sample_fraction: float | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(centroids, codebooks): coarse (centroid_id, centroid) +
-    per-subspace residual codebooks (sub, cid, centroid)."""
-    import numpy as np
+) -> IVFPQModel:
+    """Coarse centroids + per-subspace residual codebooks.
 
-    assert dim % m == 0, "dim must divide evenly into m subspaces"
-    # r13 optimization round: train_centroids returns a LOCAL relation
-    # (createDataFrame of driver-computed centroids) with the numpy matrix
-    # attached — re-consumption re-serializes driver data, it never
-    # recomputes, so the former eager localCheckpoint (one job) and the
-    # collect right after it (another job) were pure overhead (guide §5:
-    # the driver should not run jobs to move KBs it already holds).
-    # The ordered PQ training sample is collected FIRST: its head is
-    # exactly the first-k_coarse-by-id vector set the coarse init's own
-    # global top-k pass would fetch, so passing it as ``init_centroids``
-    # removes one whole-corpus orderBy-limit job from training (guide §5)
-    # — only when the coarse trainer sees the same corpus (no
-    # coarse_sample_fraction) and the sample covers k_coarse rows.
-    # Coarse Lloyd iterations still run distributed over the full corpus;
-    # centroids are bit-identical (same init values, same loop — pinned in
-    # tests/test_ivfpq.py).
-    sample = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_max).collect()
-    )
-    if not sample:
-        raise ValueError("train_ivfpq: corpus is empty — no vectors to train on")
-    x = np.asarray([r[1] for r in sample], dtype=np.float64)
+    The ordered PQ training sample is collected first; when the coarse
+    trainer sees the same corpus (no ``coarse_sample_fraction``) its head
+    is exactly the first-k_coarse-by-id init set, so it seeds
+    ``train_centroids`` and saves that pass's own top-k corpus job.  The
+    centroids are bit-identical either way (pinned in
+    tests/test_ivfpq.py)."""
+    x = _train_sample(corpus, id_col, vec_col, sample_max, m)
     fuse_init = coarse_sample_fraction is None and sample_max >= k_coarse
-    cents = train_centroids(
+    ivf = train_centroids(
         corpus,
         id_col,
         vec_col,
@@ -167,62 +164,20 @@ def train_ivfpq(
         sample_fraction=coarse_sample_fraction,
         init_centroids=x if fuse_init else None,
     )
-    C = cents._graft_np_centroids  # always present on a trained frame
-    resid = x - C[_nearest_rows(x, C)]  # ties -> lowest cid (argmin contract)
-    rows = _kmeans_subspace_rows(resid, m, ks, pq_iters)
-    cb = local_frame(
-        corpus.sparkSession, rows, "sub int, cid int, centroid array<double>"
-    )
-    cb._graft_np_codebooks = _codebook_tensors(rows, m, dim // m)
-    return cents, cb
-
-
-def _collect_tensors(centroids: DataFrame, codebooks: DataFrame, m: int, dim: int):
-    import numpy as np
-
-    subdim = dim // m
-    # Fast path (r13 optimization round): frames produced by train_ivfpq /
-    # train_centroids carry their numpy tensors — no collect jobs.  Frames
-    # without the attribute (e.g. an index loaded from parquet,
-    # operators/ann_index.py) fall back to the bounded collects.
-    C = getattr(centroids, "_graft_np_centroids", None)
-    if C is None:
-        c_rows = centroids.collect()
-        C = np.zeros((max(r["centroid_id"] for r in c_rows) + 1, dim))
-        for r in c_rows:
-            C[r["centroid_id"]] = r["centroid"]
-    t = getattr(codebooks, "_graft_np_codebooks", None)
-    if t is not None:
-        cents, have = t
-    else:
-        cb_rows = codebooks.collect()
-        n_cids = max(r["cid"] for r in cb_rows) + 1
-        cents = np.zeros((m, n_cids, subdim))
-        have = np.zeros((m, n_cids), dtype=bool)
-        for r in cb_rows:
-            cents[r["sub"], r["cid"]] = r["centroid"]
-            have[r["sub"], r["cid"]] = True
-    # n_cids is the TRAINED codebook width — may be < the nominal ks when
-    # _kmeans_subspace_rows clamped to the sample size; it is the only
-    # valid LUT stride (ADVICE r7).
-    return C, cents, have, cents.shape[1]
+    resid = x - ivf.C[_nearest_rows(x, ivf.C)]  # ties -> lowest cid (argmin contract)
+    return IVFPQModel(ivf, PQModel(_kmeans_subspaces(resid, m, ks, pq_iters)))
 
 
 def encode_ivfpq(
     corpus: DataFrame,
-    centroids: DataFrame,
-    codebooks: DataFrame,
+    model: IVFPQModel,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = 8,
-    dim: int = 64,
 ) -> DataFrame:
     """(centroid_id, vec_id, codes) — the compressed inverted lists, one
     Arrow pass, zero shuffle."""
-    import numpy as np
-
-    subdim = dim // m
-    C, cents, have, _ = _collect_tensors(centroids, codebooks, m, dim)
+    C, cents = model.ivf.C, model.pq.codebooks
+    m, _, subdim = cents.shape
     id_type = corpus.schema[id_col].dataType.simpleString()
 
     def enc(batches):
@@ -235,7 +190,7 @@ def encode_ivfpq(
             x = np.asarray(list(pdf[vec_col]), dtype=np.float64)
             cid = _nearest_rows(x, C)
             r = (x - C[cid]).reshape(n, m, subdim)
-            codes = _subspace_codes(r, cents, have)
+            codes = _subspace_codes(r, cents)
             yield pd.DataFrame(
                 {
                     "centroid_id": cid,
@@ -252,42 +207,26 @@ def encode_ivfpq(
 def ivfpq_topk(
     queries: DataFrame,
     index: DataFrame,
-    centroids: DataFrame,
-    codebooks: DataFrame,
+    model: IVFPQModel,
     corpus: DataFrame | None = None,
     k: int = 10,
     nprobe: int = 4,
     expand: int = 20,
-    ks: int = 16,
     query_id: str = "query_id",
     query_vec: str = "query_vec",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = 8,
-    dim: int = 64,
 ) -> DataFrame:
     """(query_id, vec_id, dist|approx_dist, rank) — ADC top-k over the
     ``nprobe`` probed lists; with ``corpus`` given, exact re-rank of the
-    ``k·expand`` ADC shortlist (the production shape).
-
-    ``ks`` is accepted for signature symmetry with ``train_ivfpq`` but
-    IGNORED: the LUT stride must be the TRAINED codebook width (which
-    clamps to the training sample size), read from the codebook frame
-    itself — indexing by a nominal ks reads wrong cells (ADVICE r7)."""
-    import numpy as np
-
-    subdim = dim // m
-    C, cents, have, n_cids = _collect_tensors(centroids, codebooks, m, dim)
+    ``k·expand`` ADC shortlist (the production shape)."""
+    C, cents = model.ivf.C, model.pq.codebooks
+    m, n_cids, subdim = cents.shape
     qid_type = queries.schema[query_id].dataType.simpleString()
 
-    # Probe selection + per-(query, probe) LUTs run DRIVER-SIDE (r13
-    # optimization round, guide §5): the query frame is bounded by
-    # contract (it is broadcast below either way), so ONE collect replaces
-    # the former mapInPandas pass + eager localCheckpoint + distinct()
-    # collect — three synchronous driver round-trips and a Python-worker
-    # hop — with identical numpy arithmetic on identical float64 inputs.
-    # The LUT frame becomes a local relation, legally broadcast-hintable
-    # without materialization (nothing lazy or unbounded behind it).
+    # Probe selection and per-(query, probe) LUTs run driver-side: the
+    # query frame is bounded by contract, so one collect feeds the LUTs
+    # and, with ``corpus``, the exact re-rank's query side.
     q_sel = queries.select(query_id, query_vec)
     q_rows = q_sel.collect()
     out_q, out_c, out_l = [], [], []
@@ -299,41 +238,21 @@ def ivfpq_topk(
         for cid in probes:
             r = (q - C[cid]).reshape(m, subdim)
             lut = ((r[:, None, :] - cents) ** 2).sum(-1)  # (m, n_cids)
-            lut[~have] = np.inf
             out_q.append(qid)
             out_c.append(int(cid))
             out_l.append([float(v) for v in lut.reshape(-1)])
-    # LocalRelation (r14, functions/localrel.py): the list-backed frame
-    # scanned as a 32-task parallelized RDD in every consumer and its
-    # broadcast cost a collect job; the Arrow local relation is job-free.
     luts = local_frame(
         queries.sparkSession,
         list(zip(out_q, out_c, out_l)),
         f"{query_id} {qid_type}, centroid_id int, lut array<double>",
     )
-    # Probe-list pruning (r12, ann_index): restrict the code index to the
-    # ≤|Q|·nprobe DISTINCT probed lists BEFORE the join.  Semantically a
-    # no-op (the LUT join already drops unprobed lists) but it turns the
-    # scan itself into a pruned one: on a persisted index partitioned by
-    # centroid_id (operators/ann_index.py) the isin filter prunes parquet
-    # partitions, so a probe READS nprobe/k_coarse of the on-disk index.
-    # The probe set is already on the driver — no job needed for it.
-    probe_ids = sorted(set(out_c))
-    index = index.filter(F.col("centroid_id").isin(probe_ids))
-    # LUT stride is the TRAINED width n_cids, not the nominal ks — the
-    # codebook clamps to the sample size, and the LUT above is built at
-    # shape (m, n_cids); indexing by ks would read wrong cells (ADVICE r7).
+    # Restrict the code index to the ≤|Q|·nprobe probed lists before the
+    # join: a no-op on the result (the LUT join drops unprobed lists) that
+    # makes a centroid_id-partitioned index (operators/ann_index.py) read
+    # only nprobe/k_coarse of its parquet partitions.
+    index = index.filter(F.col("centroid_id").isin(sorted(set(out_c))))
     scored = index.join(F.broadcast(luts), "centroid_id").withColumn(
-        "approx_dist",
-        F.aggregate(
-            F.zip_with(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                F.col("codes"),
-                lambda s, c: F.col("lut")[s * n_cids + c],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
+        "approx_dist", _adc_dist(m, n_cids)
     )
     w = Window.partitionBy(query_id).orderBy("approx_dist", id_col)
     shortlist_k = k * expand if corpus is not None else k
@@ -344,36 +263,11 @@ def ivfpq_topk(
     )
     if corpus is None:
         return adc
-    # r14 optimization round (guide §5): the former eager localCheckpoint
-    # here paid ONE extra job (compute + persist the shortlist) purely to
-    # satisfy the materialize-before-hint policy.  The bound is already
-    # provable at construction time — the rank filter caps the frame at
-    # |Q|·shortlist_k rows and |Q| = len(q_rows) was just collected for
-    # the LUTs — so a no-op ``limit(bound)`` makes the bound visible to
-    # the planner and the forced-broadcast audit (the setsim
-    # ``limit(n_docs)`` recipe) and the broadcast build itself computes
-    # the ADC pipeline in one pass, no separate materialization job.
-    shortlist = adc.select(
-        query_id, F.col(id_col).alias("cand_id")
-    ).limit(len(q_rows) * shortlist_k)
-    cand = corpus.join(
-        F.broadcast(shortlist), corpus[id_col] == shortlist["cand_id"]
-    ).select(query_id, "cand_id", F.col(vec_col).alias("cand_vec"))
-    # r14: the re-rank used to broadcast the ORIGINAL query frame — one
-    # more broadcast-build job re-scanning storage for rows the driver
-    # collected two lines up.  Rebuilding them as a local relation (same
-    # schema, same rows — collect/createDataFrame round-trips the float
-    # values exactly) makes the broadcast job-free: a LocalTableScan
-    # collects on the driver without submitting a job.
-    q_local = local_frame(queries.sparkSession, q_rows, q_sel.schema)
-    exact = cand.join(F.broadcast(q_local), query_id).withColumn(
-        "dist", _sub_sq_dist("cand_vec", query_vec)
+    shortlist = adc.select(query_id, F.col(id_col).alias("cand_id")).limit(
+        len(q_rows) * shortlist_k
     )
-    w2 = Window.partitionBy(query_id).orderBy("dist", "cand_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, F.col("cand_id").alias(id_col), "dist", "rank")
+    return _exact_rerank(
+        shortlist, corpus, q_rows, q_sel.schema, k, query_id, query_vec, id_col, vec_col
     )
 
 

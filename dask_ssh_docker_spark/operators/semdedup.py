@@ -90,27 +90,18 @@ def semdedup(
 
     Plan shape (the 100 TB story): train on a bounded sample
     (``sample_fraction``), assign every vector in ONE Arrow map pass
-    closing over the k collected centroids (zero shuffle —
+    closing over the k trained centroids (zero shuffle —
     :func:`ivf._assign`), then ONE shuffle by cluster id into
     ``applyInPandas`` groups.  Vector bodies move exactly once.
     """
     import numpy as np
 
-    cents = train_centroids(
+    model = train_centroids(
         corpus, id_col, vec_col, k=k, iters=iters, sample_fraction=sample_fraction
     )
-    # trained frames carry the centroid matrix — no collect job (r13
-    # optimization round; fallback kept for externally-built frames)
-    C = getattr(cents, "_graft_np_centroids", None)
-    if C is None:
-        rows = cents.collect()
-        dim = len(rows[0]["centroid"])
-        C = np.zeros((max(r["centroid_id"] for r in rows) + 1, dim))
-        for r in rows:
-            C[r["centroid_id"]] = r["centroid"]
-
+    C = model.C
     vecs = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    assigned = _assign(vecs, cents, keep_vec=True)
+    assigned = _assign(vecs, model, keep_vec=True)
     id_t = vecs.schema["id"].dataType.simpleString()
 
     def dedup_cluster(pdf):

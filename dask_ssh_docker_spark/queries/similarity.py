@@ -162,9 +162,9 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
-    cents = train_centroids(corpus, k=16, iters=2)
-    idx = build_index(corpus, cents)
-    return ivf_topk(queries_df, idx, cents, k=10, nprobe=12).orderBy(
+    model = train_centroids(corpus, k=16, iters=2)
+    idx = build_index(corpus, model)
+    return ivf_topk(queries_df, idx, model, k=10, nprobe=12).orderBy(
         "query_id", "rank"
     )
 
@@ -189,15 +189,14 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
-    cb = train_pq_codebooks(corpus, m=16, ks=16, dim=64, iters=2)
-    # no lineage cut (r14): the code index has exactly ONE consumer — the
-    # ADC scoring inside the shortlist broadcast (the exact re-rank joins
-    # the raw corpus by id, never the codes) — so the former lazy
-    # localCheckpoint only paid a persist write with zero reuse
-    idx = pq_encode(corpus, cb, m=16, dim=64)
-    return pq_topk_rerank(
-        queries_df, idx, cb, corpus, k=10, expand=20, ks=16, m=16, dim=64
-    ).orderBy("query_id", "rank")
+    model = train_pq_codebooks(corpus, m=16, ks=16, iters=2)
+    # no lineage cut: the code index has exactly ONE consumer — the ADC
+    # scoring inside the shortlist broadcast (the exact re-rank joins the
+    # raw corpus by id, never the codes)
+    idx = pq_encode(corpus, model)
+    return pq_topk_rerank(queries_df, idx, model, corpus, k=10, expand=20).orderBy(
+        "query_id", "rank"
+    )
 
 
 @query("sim_topk_ivfpq", oracle=None)
@@ -230,16 +229,15 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = papq.read_metadata(f"{sf_dir}/embeddings.parquet").num_rows
     except Exception:
         n = emb.count()  # non-local path: one metadata-cheap job
-    cents, cb = train_ivfpq(
-        corpus, k_coarse=coarse_k_for(n), coarse_iters=2, m=16, ks=16, dim=64
+    model = train_ivfpq(
+        corpus, k_coarse=coarse_k_for(n), coarse_iters=2, m=16, ks=16
     )
-    # no lineage cut (r14): the code index has exactly ONE consumer — the
-    # ADC scoring inside the shortlist broadcast — same rationale as
+    # no lineage cut: the code index has exactly ONE consumer — the ADC
+    # scoring inside the shortlist broadcast — same rationale as
     # sim_topk_pq above
-    idx = encode_ivfpq(corpus, cents, cb, m=16, dim=64)
+    idx = encode_ivfpq(corpus, model)
     return ivfpq_topk(
-        queries_df, idx, cents, cb, corpus,
-        k=10, nprobe=12, expand=20, ks=16, m=16, dim=64,
+        queries_df, idx, model, corpus, k=10, nprobe=12, expand=20
     ).orderBy("query_id", "rank")
 
 

@@ -97,10 +97,9 @@ def main(argv: list[str]) -> int:
     pq_queries = emb.filter("vec_id < 5").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    cb = train_pq_codebooks(pq_corpus, m=16, ks=16, dim=64, iters=1)
+    cb = train_pq_codebooks(pq_corpus, m=16, ks=16, iters=1)
     pq_hits = pq_topk_rerank(
-        pq_queries, pq_encode(pq_corpus, cb, m=16, dim=64), cb, pq_corpus,
-        k=10, expand=5, ks=16, m=16, dim=64,
+        pq_queries, pq_encode(pq_corpus, cb), cb, pq_corpus, k=10, expand=5
     ).count()
 
     docs = load_table(spark, sf_dir, "documents")

@@ -41,16 +41,18 @@ def test_ivfpq_index_roundtrip_equals_in_session(spark, emb, tmp_path):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
-    cents, cb = train_ivfpq(corpus, k_coarse=16, coarse_iters=2, m=16, ks=16, dim=64)
-    index = encode_ivfpq(corpus, cents, cb, m=16, dim=64)
-    in_session = ivfpq_topk(
-        queries, index, cents, cb, corpus=corpus, k=10, nprobe=12, m=16, dim=64
-    )
+    model = train_ivfpq(corpus, k_coarse=16, coarse_iters=2, m=16, ks=16)
+    index = encode_ivfpq(corpus, model)
+    in_session = ivfpq_topk(queries, index, model, corpus=corpus, k=10, nprobe=12)
 
     path = str(tmp_path / "ivfpq_idx")
-    save_ivfpq_index(path, cents, cb, index, m=16, dim=64, k_coarse=16)
+    save_ivfpq_index(path, model, index)
     idx = load_ivfpq_index(spark, path)
-    assert (idx.m, idx.dim, idx.k_coarse, idx.id_col) == (16, 64, 16, "vec_id")
+    assert (idx.model.pq.codebooks.shape, idx.model.ivf.C.shape, idx.id_col) == (
+        (16, 16, 4),
+        (16, 64),
+        "vec_id",
+    )
     loaded = ivfpq_probe(queries, idx, corpus=corpus, k=10, nprobe=12)
 
     cols = ["query_id", "vec_id", "dist", "rank"]
@@ -72,10 +74,10 @@ def test_ivfpq_loaded_probe_prunes_partitions(spark, emb, tmp_path):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     corpus = emb.filter(F.col("vec_id") >= 2).select("vec_id", "embedding")
-    cents, cb = train_ivfpq(corpus, k_coarse=16, coarse_iters=2, m=16, ks=16, dim=64)
-    index = encode_ivfpq(corpus, cents, cb, m=16, dim=64)
+    model = train_ivfpq(corpus, k_coarse=16, coarse_iters=2, m=16, ks=16)
+    index = encode_ivfpq(corpus, model)
     path = str(tmp_path / "ivfpq_prune")
-    save_ivfpq_index(path, cents, cb, index, m=16, dim=64, k_coarse=16)
+    save_ivfpq_index(path, model, index)
     idx = load_ivfpq_index(spark, path)
     n_parts_on_disk = len(
         [d for d in os.listdir(f"{path}/codes") if d.startswith("centroid_id=")]
@@ -164,12 +166,9 @@ def test_append_grows_index_and_probe_covers_new_rows(spark, emb, tmp_path):
     corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
     old = corpus.filter(F.col("vec_id") < 250)
     new = corpus.filter(F.col("vec_id") >= 250)
-    cents, cb = train_ivfpq(old, k_coarse=16, coarse_iters=2, m=16, ks=16, dim=64)
+    model = train_ivfpq(old, k_coarse=16, coarse_iters=2, m=16, ks=16)
     path = str(tmp_path / "grown_idx")
-    save_ivfpq_index(
-        path, cents, cb, encode_ivfpq(old, cents, cb, m=16, dim=64),
-        m=16, dim=64, k_coarse=16, fitted_rows=245,
-    )
+    save_ivfpq_index(path, model, encode_ivfpq(old, model), fitted_rows=245)
     assert load_ivfpq_index(spark, path).fitted_rows == 245
 
     grown = append_ivfpq_index(spark, path, new)
@@ -190,3 +189,33 @@ def test_append_grows_index_and_probe_covers_new_rows(spark, emb, tmp_path):
     assert refit_recommended(grown, current_rows=16_384) is False
     # past the floor the ⌈√n⌉ law takes over: ⌈√16385⌉ = 129 > 2×16
     assert refit_recommended(grown, current_rows=16_385) is True
+
+
+def test_load_probe_job_count(spark, sf_dir, spark_work, tmp_path):
+    """load_ivfpq_index → ivfpq_probe(corpus=…) at sf0.001: 15 jobs / 51
+    tasks.  Loading collects each trained tensor once; the probe reads
+    them from the model."""
+    from dask_ssh_docker_spark.operators.ann_index import (
+        ivfpq_probe,
+        load_ivfpq_index,
+        save_ivfpq_index,
+    )
+    from dask_ssh_docker_spark.operators.ivfpq import encode_ivfpq, train_ivfpq
+    from dask_ssh_docker_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
+    model = train_ivfpq(corpus, k_coarse=16, coarse_iters=2, m=16, ks=16)
+    path = str(tmp_path / "ivfpq_jobs")
+    save_ivfpq_index(path, model, encode_ivfpq(corpus, model))
+    with spark_work() as w:
+        idx = load_ivfpq_index(spark, path)
+        ivfpq_probe(queries, idx, corpus=corpus, k=10, nprobe=12).collect()
+    assert w.jobs == 15
+    # tasks of parquet-footer and shuffle stages scale with the default
+    # parallelism; the count was measured at 8 (any local[N≤8] session)
+    if spark.sparkContext.defaultParallelism == 8:
+        assert w.tasks == 51

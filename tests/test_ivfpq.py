@@ -23,20 +23,18 @@ M, KS, DIM, KC = 16, 16, 64, 16
 
 def _setup(spark):
     emb = load_table(spark, SF01, "embeddings")
-    cents, cb = train_ivfpq(
-        emb, k_coarse=KC, coarse_iters=2, m=M, ks=KS, dim=DIM
-    )
-    idx = encode_ivfpq(emb, cents, cb, m=M, dim=DIM).localCheckpoint(eager=False)
+    model = train_ivfpq(emb, k_coarse=KC, coarse_iters=2, m=M, ks=KS)
+    idx = encode_ivfpq(emb, model).localCheckpoint(eager=False)
     queries = emb.filter("vec_id < 5").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return emb, cents, cb, idx, queries
+    return emb, model, idx, queries
 
 
 def test_index_shape(spark):
-    emb, cents, cb, idx, _ = _setup(spark)
-    assert cents.count() == KC
-    assert cb.count() == M * KS
+    emb, model, idx, _ = _setup(spark)
+    assert model.ivf.frame(spark).count() == KC
+    assert model.pq.frame(spark).count() == M * KS
     assert idx.count() == emb.count()
     row = idx.first()
     assert 0 <= row.centroid_id < KC
@@ -48,21 +46,17 @@ def test_index_shape(spark):
 def test_adc_self_retrieval_rank1(spark):
     """A query identical to an indexed vector must ADC-retrieve itself
     first: its residual is quantized by the very codes being scored."""
-    emb, cents, cb, idx, queries = _setup(spark)
+    emb, model, idx, queries = _setup(spark)
     got = ivfpq_topk(
-        queries, idx, cents, cb, corpus=None,
-        k=1, nprobe=KC, ks=KS, m=M, dim=DIM,  # all lists: pure ADC check
+        queries, idx, model, corpus=None, k=1, nprobe=KC,  # all lists: pure ADC
     )
     top1 = {r.query_id: r.vec_id for r in got.collect()}
     assert top1 == {q: q for q in range(5)}
 
 
 def test_rerank_recall_vs_exact(spark):
-    emb, cents, cb, idx, queries = _setup(spark)
-    got = ivfpq_topk(
-        queries, idx, cents, cb, emb,
-        k=10, nprobe=12, expand=20, ks=KS, m=M, dim=DIM,
-    )
+    emb, model, idx, queries = _setup(spark)
+    got = ivfpq_topk(queries, idx, model, emb, k=10, nprobe=12, expand=20)
     ivfpq_sets: dict = {}
     for r in got.collect():
         ivfpq_sets.setdefault(r.query_id, set()).add(r.vec_id)
@@ -100,22 +94,31 @@ def test_residual_beats_raw_quantization(spark):
     rows = emb.orderBy("vec_id").limit(200).collect()
     x = np.asarray([r.embedding for r in rows], dtype=np.float64)
 
-    cents, cb = train_ivfpq(emb, k_coarse=KC, coarse_iters=2, m=M, ks=KS, dim=DIM)
+    model = train_ivfpq(emb, k_coarse=KC, coarse_iters=2, m=M, ks=KS)
     idx = {
         r.vec_id: (r.centroid_id, r.codes)
-        for r in encode_ivfpq(emb, cents, cb, m=M, dim=DIM)
+        for r in encode_ivfpq(emb, model)
         .filter(F.col("vec_id") < 200).collect()
     }
-    C = {r.centroid_id: np.asarray(r.centroid) for r in cents.collect()}
-    B = {(r.sub, r.cid): np.asarray(r.centroid) for r in cb.collect()}
+    C = {
+        r.centroid_id: np.asarray(r.centroid)
+        for r in model.ivf.frame(spark).collect()
+    }
+    B = {
+        (r.sub, r.cid): np.asarray(r.centroid)
+        for r in model.pq.frame(spark).collect()
+    }
 
-    cb_raw = train_pq_codebooks(emb, m=M, ks=KS, dim=DIM, iters=3)
+    cb_raw = train_pq_codebooks(emb, m=M, ks=KS, iters=3)
     raw_idx = {
         r.vec_id: r.codes
-        for r in pq_encode(emb, cb_raw, m=M, dim=DIM)
+        for r in pq_encode(emb, cb_raw)
         .filter(F.col("vec_id") < 200).collect()
     }
-    B_raw = {(r.sub, r.cid): np.asarray(r.centroid) for r in cb_raw.collect()}
+    B_raw = {
+        (r.sub, r.cid): np.asarray(r.centroid)
+        for r in cb_raw.frame(spark).collect()
+    }
 
     sub = DIM // M
 
@@ -173,15 +176,13 @@ def test_adc_stride_on_clamped_codebook(spark):
     # not the nominal ks, or ADC reads wrong cells.  5-vector corpus,
     # nominal ks=16 -> trained width 5; self-retrieval must stay exact.
     emb = load_table(spark, SF01, "embeddings").filter("vec_id < 5")
-    cents, cb = train_ivfpq(emb, k_coarse=2, coarse_iters=1, m=M, ks=KS, dim=DIM)
-    assert cb.count() == M * 5  # clamped
-    idx = encode_ivfpq(emb, cents, cb, m=M, dim=DIM)
+    model = train_ivfpq(emb, k_coarse=2, coarse_iters=1, m=M, ks=KS)
+    assert model.pq.frame(spark).count() == M * 5  # clamped
+    idx = encode_ivfpq(emb, model)
     queries = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    got = ivfpq_topk(
-        queries, idx, cents, cb, corpus=None, k=1, nprobe=2, ks=KS, m=M, dim=DIM
-    ).collect()
+    got = ivfpq_topk(queries, idx, model, corpus=None, k=1, nprobe=2).collect()
     assert {r.query_id: r.vec_id for r in got} == {q: q for q in range(5)}
     assert all(r.approx_dist is not None for r in got)
 
@@ -254,11 +255,29 @@ def test_fused_init_centroids_bit_identical(spark):
     from dask_ssh_docker_spark.operators.ivf import train_centroids
 
     emb = load_table(spark, SF01, "embeddings")
-    cents_fused, _ = train_ivfpq(
-        emb, k_coarse=KC, coarse_iters=2, m=M, ks=KS, dim=DIM
-    )
-    cents_solo = train_centroids(emb, k=KC, iters=2)
-    a = cents_fused._graft_np_centroids
-    b = cents_solo._graft_np_centroids
+    fused = train_ivfpq(emb, k_coarse=KC, coarse_iters=2, m=M, ks=KS)
+    solo = train_centroids(emb, k=KC, iters=2)
+    a = fused.ivf.C
+    b = solo.C
     assert a.shape == b.shape
     assert np.array_equal(a, b), "fused-init coarse centroids diverged"
+
+
+def test_train_encode_rerank_job_count(spark, sf_dir, spark_work):
+    """train → encode → ivfpq_topk(corpus=…) at sf0.001: 10 jobs / 23
+    tasks.  Trained tensors live on the model, so no step re-collects
+    them."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter("vec_id < 5").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    corpus = emb.filter("vec_id >= 5").select("vec_id", "embedding")
+    with spark_work() as w:
+        model = train_ivfpq(corpus, k_coarse=KC, coarse_iters=2, m=M, ks=KS)
+        idx = encode_ivfpq(corpus, model)
+        ivfpq_topk(queries, idx, model, corpus, k=10, nprobe=12, expand=20).collect()
+    assert w.jobs == 10
+    # tasks of parquet-footer and shuffle stages scale with the default
+    # parallelism; the count was measured at 8 (any local[N≤8] session)
+    if spark.sparkContext.defaultParallelism == 8:
+        assert w.tasks == 23

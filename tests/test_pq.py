@@ -3,10 +3,14 @@ self-retrieval, and shortlist+rerank recall vs exact L2."""
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dask_ssh_docker_spark.operators.pq import (
+    PQModel,
+    _pq_luts,
     _sub_sq_dist,
     pq_encode,
     pq_topk,
@@ -21,8 +25,8 @@ M, KS, DIM = 16, 16, 64
 
 def _setup(spark):
     emb = load_table(spark, SF01, "embeddings")
-    cb = train_pq_codebooks(emb, m=M, ks=KS, dim=DIM, iters=2)
-    idx = pq_encode(emb, cb, m=M, dim=DIM)
+    cb = train_pq_codebooks(emb, m=M, ks=KS, iters=2)
+    idx = pq_encode(emb, cb)
     queries = emb.filter("vec_id < 5").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -31,7 +35,7 @@ def _setup(spark):
 
 def test_codebook_shape_and_encode_range(spark):
     emb, cb, idx, _ = _setup(spark)
-    assert cb.count() == M * KS
+    assert cb.frame(spark).count() == M * KS
     row = idx.first()
     assert len(row.codes) == M
     assert all(0 <= c < KS for c in row.codes)
@@ -40,16 +44,14 @@ def test_codebook_shape_and_encode_range(spark):
 
 def test_adc_self_retrieval_rank1(spark):
     emb, cb, idx, queries = _setup(spark)
-    got = pq_topk(queries, idx, cb, k=1, ks=KS, m=M, dim=DIM)
+    got = pq_topk(queries, idx, cb, k=1)
     top1 = {r.query_id: r.vec_id for r in got.collect()}
     assert top1 == {q: q for q in range(5)}
 
 
 def test_shortlist_rerank_recall_vs_exact(spark):
     emb, cb, idx, queries = _setup(spark)
-    got = pq_topk_rerank(
-        queries, idx, cb, emb, k=10, expand=5, ks=KS, m=M, dim=DIM
-    )
+    got = pq_topk_rerank(queries, idx, cb, emb, k=10, expand=5)
     pq_sets: dict = {}
     for r in got.collect():
         pq_sets.setdefault(r.query_id, set()).add(r.vec_id)
@@ -73,7 +75,7 @@ def test_shortlist_rerank_recall_vs_exact(spark):
 def test_plan_no_python_eval(spark):
     emb, cb, idx, queries = _setup(spark)
     plan = (
-        pq_topk(queries, idx, cb, k=10, ks=KS, m=M, dim=DIM)
+        pq_topk(queries, idx, cb, k=10)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -106,19 +108,17 @@ def test_codebook_clamps_to_small_corpus(spark):
     # ADVICE r6: a corpus with fewer than ks vectors must train a smaller
     # codebook (ks' = corpus size), not index past the sample
     emb = load_table(spark, SF01, "embeddings").filter("vec_id < 5")
-    cb = train_pq_codebooks(emb, m=M, ks=KS, dim=DIM, iters=1)
-    assert cb.count() == M * 5
-    idx = pq_encode(emb, cb, m=M, dim=DIM)
+    cb = train_pq_codebooks(emb, m=M, ks=KS, iters=1)
+    assert cb.frame(spark).count() == M * 5
+    idx = pq_encode(emb, cb)
     assert idx.count() == 5
     assert all(0 <= c < 5 for c in idx.first().codes)
 
 
 def test_codebook_empty_corpus_raises(spark):
     emb = load_table(spark, SF01, "embeddings").filter("vec_id < 0")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="empty"):
-        train_pq_codebooks(emb, m=M, ks=KS, dim=DIM, iters=1)
+    with pytest.raises(ValueError, match="empty"):
+        train_pq_codebooks(emb, m=M, ks=KS, iters=1)
 
 
 def test_adc_stride_on_clamped_codebook(spark):
@@ -129,12 +129,83 @@ def test_adc_stride_on_clamped_codebook(spark):
     # sharpest check: a mis-strided LUT cannot rank every query's own
     # vector first.
     emb = load_table(spark, SF01, "embeddings").filter("vec_id < 5")
-    cb = train_pq_codebooks(emb, m=M, ks=KS, dim=DIM, iters=1)
-    assert cb.count() == M * 5  # clamped: 5 < nominal ks=16
-    idx = pq_encode(emb, cb, m=M, dim=DIM)
+    cb = train_pq_codebooks(emb, m=M, ks=KS, iters=1)
+    assert cb.frame(spark).count() == M * 5  # clamped: 5 < nominal ks=16
+    idx = pq_encode(emb, cb)
     queries = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    got = pq_topk(queries, idx, cb, k=1, ks=KS, m=M, dim=DIM).collect()
+    got = pq_topk(queries, idx, cb, k=1).collect()
     assert {r.query_id: r.vec_id for r in got} == {q: q for q in range(5)}
     assert all(r.approx_dist is not None for r in got)
+
+
+def test_rerank_names_query_id_column_by_parameter(spark):
+    # ADVICE pq.py:400: the re-rank joined its query side on a literal
+    # "query_id", so any other query_id= raised an analysis error
+    emb, cb, idx, queries = _setup(spark)
+    default = pq_topk_rerank(queries, idx, cb, emb, k=10, expand=5)
+    renamed = pq_topk_rerank(
+        queries.withColumnRenamed("query_id", "qid"),
+        idx, cb, emb, k=10, expand=5, query_id="qid",
+    )
+    assert renamed.columns == ["qid", "vec_id", "dist", "rank"]
+    assert sorted(map(tuple, renamed.collect())) == sorted(
+        map(tuple, default.collect())
+    )
+
+
+def test_lut_matches_reference_loop_on_clamped_codebook(spark):
+    """The vectorized LUT keeps the scalar left fold, so every double
+    equals the per-cell Python loop it replaced (kept here as the
+    reference) exactly."""
+    emb = load_table(spark, SF01, "embeddings")
+    cb = train_pq_codebooks(emb.filter("vec_id < 5"), m=M, ks=KS, iters=1).codebooks
+    assert cb.shape == (M, 5, DIM // M)  # clamped below the nominal ks
+    qs = [r.embedding for r in emb.filter("vec_id < 8").orderBy("vec_id").collect()]
+    subdim = DIM // M
+    ref = []
+    for qv in qs:
+        lut = []
+        for sub in range(M):
+            for cid in range(cb.shape[1]):
+                acc = 0.0
+                for j in range(subdim):
+                    dj = float(qv[sub * subdim + j]) - float(cb[sub, cid, j])
+                    acc = acc + dj * dj
+                lut.append(acc)
+        ref.append(lut)
+    q = np.asarray(qs, dtype=np.float64).reshape(len(qs), M, subdim)
+    assert _pq_luts(q, cb).reshape(len(qs), -1).tolist() == ref
+
+
+def test_loaded_codebook_missing_cell_raises(spark, tmp_path):
+    """Training fills every (sub, cid) cell, so a saved codebook with a
+    hole is damaged input: loading it raises instead of masking it."""
+    emb = load_table(spark, SF01, "embeddings").filter("vec_id < 5")
+    model = train_pq_codebooks(emb, m=M, ks=KS, iters=1)
+    path = str(tmp_path / "codebooks")
+    model.frame(spark).write.parquet(path)
+    saved = spark.read.parquet(path)
+    assert np.array_equal(PQModel.from_frames(saved).codebooks, model.codebooks)
+    with pytest.raises(ValueError, match="dense"):
+        PQModel.from_frames(saved.filter("NOT (sub = 3 AND cid = 2)"))
+
+
+def test_train_encode_rerank_job_count(spark, sf_dir, spark_work):
+    """train → encode → pq_topk_rerank at sf0.001: 8 jobs / 18 tasks.
+    Trained tensors live on the model, so no step re-collects them."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter("vec_id < 5").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    corpus = emb.filter("vec_id >= 5").select("vec_id", "embedding")
+    with spark_work() as w:
+        model = train_pq_codebooks(corpus, m=M, ks=KS, iters=2)
+        idx = pq_encode(corpus, model)
+        pq_topk_rerank(queries, idx, model, corpus, k=10, expand=20).collect()
+    assert w.jobs == 8
+    # tasks of parquet-footer and shuffle stages scale with the default
+    # parallelism; the count was measured at 8 (any local[N≤8] session)
+    if spark.sparkContext.defaultParallelism == 8:
+        assert w.tasks == 18

@@ -175,3 +175,13 @@ def test_run_to_completion_max_rows_guard(spark):
     with pytest.raises(ValueError, match="max_rows"):
         run_to_completion(tumbling_counts(stream_events(spark, SF)), max_rows=1)
     assert {t.name for t in spark.catalog.listTables()} == before
+
+
+def test_local_frame_rejects_duplicate_field_names(spark):
+    # rows split into columns by field name: a repeated name would
+    # silently collapse two columns into one
+    from dask_ssh_docker_spark.functions.localrel import local_frame
+
+    assert local_frame(spark, [(1, 2)], "a int, b int").collect()[0] == (1, 2)
+    with pytest.raises(ValueError, match="duplicate"):
+        local_frame(spark, [(1, 2)], "a int, a int")

@@ -102,7 +102,7 @@ def test_ivf_topk_recall_and_determinism(spark):
     corpus = emb.filter(F.col("vec_id") >= 10).select("vec_id", "embedding")
 
     cents = train_centroids(corpus, k=8, iters=2)
-    assert cents.count() == 8
+    assert cents.frame(spark).count() == 8
     idx = build_index(corpus, cents).persist()
     assert idx.count() == corpus.count()  # every vector in exactly one list
 
@@ -161,9 +161,9 @@ def test_ivf_sample_trained_centroids(spark):
     corpus = emb.select("vec_id", "embedding")
     c1 = train_centroids(corpus, k=8, iters=2, sample_fraction=0.5)
     c2 = train_centroids(corpus, k=8, iters=2, sample_fraction=0.5)
-    assert c1.count() == 8
-    p1 = c1.toPandas().sort_values("centroid_id")["centroid"].tolist()
-    p2 = c2.toPandas().sort_values("centroid_id")["centroid"].tolist()
+    assert c1.frame(spark).count() == 8
+    p1 = c1.frame(spark).toPandas().sort_values("centroid_id")["centroid"].tolist()
+    p2 = c2.frame(spark).toPandas().sort_values("centroid_id")["centroid"].tolist()
     assert [list(a) for a in p1] == [list(b) for b in p2]  # seeded → stable
     idx = build_index(corpus, c1)
     assert idx.count() == corpus.count()  # full corpus indexed
@@ -186,7 +186,7 @@ def test_ivf_empty_cluster_keeps_centroid_count(spark):
     pdf = pd.DataFrame({"vec_id": range(len(vecs)), "embedding": vecs})
     df = spark.createDataFrame(pdf)
     cents = train_centroids(df, k=3, iters=2)
-    out = cents.toPandas()
+    out = cents.frame(spark).toPandas()
     assert len(out) == 3 and set(out["centroid_id"]) == {0, 1, 2}
     # the empty cluster (centroid 1, the duplicate) kept its position
     c1 = [v for v in out[out.centroid_id == 1]["centroid"].iloc[0]]

@@ -125,11 +125,11 @@ def variant_sections(spark, sf_dir: str) -> list[str]:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     corpus = emb.filter(F.col("vec_id") >= 3).select("vec_id", "embedding")
-    cents, cb = train_ivfpq(corpus, k_coarse=8, coarse_iters=1, m=8, ks=16, dim=64)
-    index = encode_ivfpq(corpus, cents, cb, m=8, dim=64)
+    model = train_ivfpq(corpus, k_coarse=8, coarse_iters=1, m=8, ks=16)
+    index = encode_ivfpq(corpus, model)
     tmp = tempfile.mkdtemp(prefix="plans_ivfpq_")
     try:
-        save_ivfpq_index(tmp, cents, cb, index, m=8, dim=64, k_coarse=8)
+        save_ivfpq_index(tmp, model, index)
         idx = load_ivfpq_index(spark, tmp)
         out.append(
             "## ivfpq_probe on a LOADED index — ADC stage (fit-once / probe-many)\n\n"
