@@ -31,26 +31,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..functions.localrel import local_frame
 from ..functions.text import (
     md5_fingerprint,
     normalize_text,
     tokens,
-    word_shingles_from_tokens,
 )
 
-
-def _staged_shingles(df: DataFrame, text_col: str, id_col: str, shingle_k: int) -> DataFrame:
-    """(id, __sh: array<string>) with tokens materialized through a
-    projection boundary first — see word_shingles_from_tokens."""
-    staged = df.select(
-        F.col(id_col).alias("id"),
-        tokens(text_col).alias("__t"),
-        normalize_text(text_col).alias("__norm"),
-    )
-    return staged.select(
-        "id",
-        word_shingles_from_tokens(F.col("__t"), F.col("__norm"), shingle_k).alias("__sh"),
-    )
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -189,11 +176,11 @@ def exact_dedup(
 
 
 def shingle_rows(df: DataFrame, text_col: str, id_col: str, shingle_k: int = 3) -> DataFrame:
-    """(id, shingle) exploded word-shingle rows — the codegen builder
-    (``word_shingles_exploded``: posexplode + lead() windows, ~5× the
-    interpreted HOF array path).  NOT de-duplicated within a doc: the
-    jaccard caller applies ``.distinct()`` (set semantics), the minhash
-    fallback feeds ``min`` aggregates where duplicates are free."""
+    """(id, shingle) exploded word-shingle rows for the exact-Jaccard
+    baseline — the codegen path (``word_shingles_exploded``:
+    posexplode + lead() windows, ~5× the interpreted HOF array path).
+    NOT de-duplicated within a doc: ``jaccard_pairs_exact`` applies
+    ``.distinct()`` (set semantics)."""
     from ..functions.text import word_shingles_exploded
 
     return word_shingles_exploded(df, text_col, id_col, shingle_k).select(
@@ -201,37 +188,34 @@ def shingle_rows(df: DataFrame, text_col: str, id_col: str, shingle_k: int = 3) 
     )
 
 
-def _hashed_shingles(
-    df: DataFrame, text_col: str, id_col: str, shingle_k: int
+def hashed_shingles(
+    df: DataFrame, text_col: str, id_col: str, shingle_k: int = 3
 ) -> DataFrame:
-    """(id, __sh: array<bigint>) — distinct word shingles, each collapsed
-    to its 64-bit xxhash at the source.  The whole minhash path downstream
-    (persist, signature minima, exact-Jaccard verify via array_intersect)
-    then operates on 8-byte longs instead of multi-word strings: smaller
-    cached blocks, long-typed set ops, one string hash per shingle total.
-    Collision odds at 64 bits are ~n²/2⁶⁵ — vanishing for any per-doc or
-    per-corpus shingle count this path sees, and a collision only perturbs
-    one candidate's Jaccard estimate, which the threshold filter absorbs.
-    Only for the approximate (rows-only) minhash path — oracle-bearing
-    exact-Jaccard queries keep string shingles (``shingle_rows``).
+    """(__id, __sh: array<bigint>) — each doc's distinct word shingles,
+    each collapsed to its 64-bit xxhash at the source.  The one input
+    frame of ``minhash_signatures`` and ``jaccard_verify`` (and of the
+    prefix set-similarity join); persist it when several stages read it.
 
-    The shingle hash is derived from per-TOKEN hashes (one short string
-    hash per token, then one multi-arg ``xxhash64`` over the k token
-    longs per shingle) instead of concat_ws-ing k-word strings and
-    hashing those: identical set semantics (equal word sequences ⇔ equal
-    hash triples, modulo the same 64-bit collision odds), no per-shingle
+    Downstream (cache, signature minima, array_intersect verify) then
+    works on 8-byte longs instead of multi-word strings.  Collision odds
+    at 64 bits are ~n²/2⁶⁵, and a collision only perturbs one candidate's
+    Jaccard, which the threshold absorbs — so this is the approximate
+    path only; oracle-bearing exact-Jaccard queries keep string shingles
+    (``shingle_rows``).
+
+    The shingle hash is one multi-arg ``xxhash64`` over its k per-TOKEN
+    hashes (equal word sequences ⇔ equal hash tuples): no per-shingle
     string allocation — measured ~35% off the shingle pass at sf1.
-    Token hashes are materialized through a projection boundary first
-    (the word_shingles_from_tokens rationale: nested lambda references
-    defeat subexpression elimination)."""
+    Token hashes pass a projection boundary first (nested lambda
+    references defeat subexpression elimination)."""
     k = shingle_k
     staged = df.select(
-        F.col(id_col).alias("id"),
+        F.col(id_col).alias("__id"),
         tokens(text_col).alias("__t"),
         normalize_text(text_col).alias("__norm"),
     )
     th = staged.select(
-        "id",
+        "__id",
         F.transform("__t", lambda w: F.xxhash64(w)).alias("__th"),
         "__norm",
     )
@@ -245,52 +229,31 @@ def _hashed_shingles(
     arr = F.when(n >= k, F.array_distinct(sh)).otherwise(
         F.array(F.xxhash64(F.col("__norm")))
     )
-    return th.select("id", arr.alias("__sh"))
+    return th.select("__id", arr.alias("__sh"))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    shingle_k: int = 3,
-    shingle_arrays: DataFrame | None = None,
-) -> DataFrame:
-    """(id, sig: array<bigint>) — num_hashes 64-bit min-hashes per doc.
+def minhash_signatures(shingles: DataFrame, num_hashes: int = 32) -> DataFrame:
+    """(id, sig: array<bigint>) — num_hashes 64-bit min-hashes per doc of
+    a ``hashed_shingles`` frame.
 
-    Computed by exploding shingles and taking ``min`` aggregates (hash
-    family: multi-arg xxhash64 with an integer salt — all JVM-side, no
-    per-row string allocation).
+    Computed by exploding the shingle hashes and taking ``min`` aggregates
+    (hash family: multi-arg xxhash64 with an integer salt over the 64-bit
+    shingle hash — all JVM-side, no per-row string allocation).
     Partial aggregation happens map-side, so the shuffle carries only
     num_hashes running minimums per doc — the idiomatic Spark shape,
-    vs recomputing nested array transforms per hash function.
-
-    PERF: pass ``shingle_arrays`` (a PERSISTED shingle frame) in any hot
-    path.  The standalone fallback explodes the shingle arrays with no
-    materialization boundary, and exploding a computed array whose
-    expression is a nested higher-order chain re-evaluates the chain per
-    OUTPUT row (PLANS.md "R6" — measured ~17× at sf1).  The pipelines in
-    this module always pass the persisted frame.
+    vs recomputing nested array transforms per hash function.  The
+    explode reads a computed array column, so a persisted ``shingles``
+    frame is its materialization boundary (PLANS.md "R6": exploding an
+    unmaterialized higher-order chain re-evaluates it per output row).
     """
-    if shingle_arrays is not None:  # reuse a persisted (__id, __sh) frame
-        sh = shingle_arrays.select(
-            F.col("__id").alias("id"), F.explode("__sh").alias("shingle")
-        )
-    else:
-        sh = shingle_rows(df, text_col, id_col, shingle_k)
-    # Hash each shingle STRING once; derive the hash family by re-hashing
-    # the 64-bit base with an integer salt.  Equivalent family quality,
-    # but num_hashes-1 fewer string hashes per shingle — the string pass
-    # dominates signature cost (strings are tens of bytes; the base is 8).
-    #
-    # The whole signature is ONE parsed expr string (continuation of the
-    # r13 bloom-literal lesson): building num_hashes min/xxhash64 Columns
-    # through the Python API costs ~6 py4j round-trips EACH — cProfile
-    # put ~0.5 s of dedup_minhash_clusters' per-run driver wall in this
-    # loop alone — while one expr string is a single parse call.  The
-    # integer salt stays an INT literal ({i}, not {i}L): xxhash64 hashes
-    # 4-byte and 8-byte inputs differently, and the values must equal the
-    # former F.lit(i) (IntegerType) family bit-for-bit.
+    sh = shingles.select(
+        F.col("__id").alias("id"), F.explode("__sh").alias("shingle")
+    )
+    # One 64-bit base per shingle; the hash family re-hashes it with an
+    # integer salt.  The signature is ONE parsed expr string: num_hashes
+    # min/xxhash64 Columns built through the Python API cost ~6 py4j
+    # round-trips each.  The salt stays an INT literal ({i}, not {i}L):
+    # xxhash64 hashes 4- and 8-byte inputs differently.
     sh = sh.select("id", F.expr("xxhash64(shingle) AS __h0"))
     sig_expr = (
         "array("
@@ -301,15 +264,10 @@ def minhash_signatures(
 
 
 def minhash_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    sig_df: DataFrame | None = None,
+    sig: DataFrame, num_hashes: int = 32, bands: int = 8
 ) -> DataFrame:
-    """LSH candidate pairs (id_a < id_b) — docs sharing ≥1 band bucket.
+    """LSH candidate pairs (id_a < id_b) — docs of a ``minhash_signatures``
+    frame sharing ≥1 band bucket.
 
     Shuffle volume: |docs| × bands rows of (band_hash, id).
     """
@@ -321,11 +279,6 @@ def minhash_candidates(
             "and a remainder silently drops signature values"
         )
     rows = num_hashes // bands
-    sig = (
-        sig_df
-        if sig_df is not None
-        else minhash_signatures(df, text_col, id_col, num_hashes, shingle_k)
-    )
     # multi-arg xxhash64 over the band's longs directly — no per-row
     # string rendering of the signature slice.  One parsed expr string
     # for the whole band array (same py4j-chatter rationale as the
@@ -367,24 +320,12 @@ def minhash_candidates(
 
 
 def jaccard_verify(
-    df: DataFrame,
-    candidates: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float,
-    shingle_k: int = 3,
-    shingle_df: DataFrame | None = None,
+    candidates: DataFrame, shingles: DataFrame, threshold: float
 ) -> DataFrame:
-    """Exact Jaccard on candidate pairs only → (id_a, id_b, jaccard)."""
-    sh = (
-        shingle_df
-        if shingle_df is not None
-        else _staged_shingles(df, text_col, id_col, shingle_k).withColumnRenamed(
-            "id", "__id"
-        )
-    )
-    a = sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
-    b = sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
+    """Exact Jaccard of the ``hashed_shingles`` sets on ``candidates``
+    pairs only → (id_a, id_b, jaccard)."""
+    a = shingles.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
+    b = shingles.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
     return (
@@ -409,7 +350,8 @@ def cut_lineage(
     them — the job dies; pass ``checkpoint_dir`` (an HDFS/S3/shared path)
     to switch to reliable ``checkpoint()`` whose files survive executor
     loss (the standard durability/latency trade; results are identical,
-    pytest-pinned in tests/test_sketches_graph.py).
+    pytest-pinned in tests/test_dedup.py::
+    test_cluster_min_label_reliable_checkpoint_matches_default).
 
     ``eager=False`` marks the cut but defers materialization to the
     caller's next action — that action both computes the frame and seals
@@ -463,7 +405,7 @@ def cluster_min_label(
     |touched|), independent of corpus size.
 
     ``driver_max_edges``: when the candidate edge set fits under this
-    bound (one count on the usually-persisted pair frame), the closure
+    bound (one ``limit(bound+1)`` collect of the pair frame), the closure
     runs as driver-side union-find on the collected (id_a, id_b) pairs —
     id pairs only, never document bodies; 2M edges ≈ tens of MB.  Exact
     same labels (min member id per component), no iteration cap, zero
@@ -474,17 +416,10 @@ def cluster_min_label(
     import warnings
 
     if driver_max_edges:
-        # ONE job probes the bound AND fetches the edges: collect through
-        # limit(bound+1) — if the limit is not hit, these are exactly the
-        # edge rows union-find needs (id pairs only, never bodies); if it
-        # is hit, fall through to the distributed loop.  (Separate
-        # count-then-collect paid two driver round-trips on the suite's
-        # hottest query.)
+        # one job bounds the edge set and, under the bound, fetches it
         probe = pairs.select("id_a", "id_b").limit(driver_max_edges + 1).collect()
         if len(probe) <= driver_max_edges:
-            return _cluster_union_find(
-                pairs, ids, collected_rows=probe
-            )
+            return _cluster_union_find(probe, ids)
 
     edges = (
         pairs.select(F.col("id_a").alias("x"), F.col("id_b").alias("y"))
@@ -506,9 +441,8 @@ def cluster_min_label(
     )
     # Convergence is probed every PROBE_EVERY rounds: rounds in between are
     # lazily lineage-cut but not materialized, so the probing action runs
-    # the whole block of rounds as ONE Spark job (was: two jobs per round —
-    # eager checkpoint + a separate count).  A pair/triangle-dominated dup
-    # graph converges in 2 rounds = exactly one job here.  The probe's
+    # the whole block of rounds as ONE Spark job.  A pair/triangle-dominated
+    # dup graph converges in 2 rounds = exactly one job here.  The probe's
     # aggregate rides on the scan the lineage cut must do anyway, and its
     # __chg flag refers only to the newest round, which is the correct
     # fixpoint signal.  Worst case this runs PROBE_EVERY-1 extra rounds
@@ -583,20 +517,12 @@ def cluster_min_label(
     return clustered.union(singletons)
 
 
-def _cluster_union_find(
-    pairs: DataFrame, ids: DataFrame, collected_rows: list | None = None
-) -> DataFrame:
-    """Driver-side exact closure for a bounded dup graph: collect the id
-    pairs, union-find with path compression, re-label every root to the
-    MINIMUM member id (the module-wide canonical-survivor rule), then
-    union the distributed singleton anti-join — identical output contract
-    to the min-label loop.  ``collected_rows``: (id_a, id_b) rows already
-    collected by the caller's bound probe — skips the second job."""
-    rows = (
-        collected_rows
-        if collected_rows is not None
-        else pairs.select("id_a", "id_b").collect()
-    )
+def _cluster_union_find(rows: list, ids: DataFrame) -> DataFrame:
+    """Exact closure, in Python, of a bounded dup graph given as the
+    (id_a, id_b) ``rows`` the caller's bound probe collected: union-find
+    with path compression, re-label every root to the MINIMUM member id
+    (the module-wide canonical-survivor rule), then union the distributed
+    singleton anti-join — identical output contract to the min-label loop."""
     parent: dict = {}
 
     def find(a):
@@ -623,7 +549,6 @@ def _cluster_union_find(
         cur = min_of.get(root)
         if cur is None or node < cur:
             min_of[root] = node
-    spark = pairs.sparkSession
     id_field = ids.schema.fields[0]
     schema = StructType(
         [
@@ -631,20 +556,10 @@ def _cluster_union_find(
             StructField("cluster_id", id_field.dataType, id_field.nullable),
         ]
     )
-    # Arrow-path createDataFrame (pandas input): a plain python-list
-    # frame scans through a pickled Python RDD with NO size statistics —
-    # Catalyst then plans the singleton anti-join as a SortMergeJoin
-    # (two exchanges) and re-runs the Python scan per action (measured
-    # 3.2 s vs 0.4 s for this label frame at sf0.1).  The explicit
-    # broadcast is safe: the frame is ≤ the collected edge bound.
-    import pandas as pd
-
-    items = [(n, min_of[find(n)]) for n in parent]
-    labels = spark.createDataFrame(
-        pd.DataFrame(items, columns=["id", "cluster_id"], dtype=object)
-        if items
-        else pd.DataFrame({"id": [], "cluster_id": []}),
-        schema,
+    # a local relation carries size statistics, so the anti-join plans as
+    # a broadcast; the frame is ≤ the collected edge bound
+    labels = local_frame(
+        ids.sparkSession, [(n, min_of[find(n)]) for n in parent], schema
     )
     singletons = ids.join(
         F.broadcast(labels.select("id")), "id", "left_anti"
@@ -668,24 +583,16 @@ def minhash_dedup(
     downstream joins (a/b sides; CC iterations), and without persistence
     the full upstream pipeline re-executes per consumer.
     """
-    sh_arr = _hashed_shingles(df, text_col, id_col, shingle_k).withColumnRenamed(
-        "id", "__id"
-    ).persist()
-    sig = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_k, shingle_arrays=sh_arr
-    )
-    cands = minhash_candidates(
-        df, text_col, id_col, num_hashes, bands, shingle_k, sig_df=sig
-    )
-    verified = jaccard_verify(
-        df, cands, text_col, id_col, threshold, shingle_k, shingle_df=sh_arr
-    ).persist()
+    shingles = hashed_shingles(df, text_col, id_col, shingle_k).persist()
+    sig = minhash_signatures(shingles, num_hashes)
+    cands = minhash_candidates(sig, num_hashes, bands)
+    verified = jaccard_verify(cands, shingles, threshold).persist()
     ids = df.select(F.col(id_col).alias("id"))
     clusters = cluster_min_label(verified, ids)
-    # cluster_min_label localCheckpoints its labels, so the upstream
+    # cluster_min_label's labels are collected or lineage-cut, so the
     # shingle/verify caches are no longer reachable — release them.
     verified.unpersist()
-    sh_arr.unpersist()
+    shingles.unpersist()
     return clusters.withColumn("is_canonical", F.col("id") == F.col("cluster_id"))
 
 

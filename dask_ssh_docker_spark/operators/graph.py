@@ -5,9 +5,11 @@ The min-label propagation loop lives in ``operators/dedup.py``
 is the public, domain-neutral entry point for users who bring their own
 edge list (co-occurrence graphs, entity resolution, lineage closure).
 
-Scale shape: one edge-set shuffle per round, eager ``localCheckpoint``
-lineage cuts, convergence early-exit, strict cap on rounds (components
-wider than the cap raise instead of silently splitting).  Correctness is
+Scale shape: one edge-set shuffle per round, lazy ``localCheckpoint``
+lineage cuts materialized by one job per convergence-probe block,
+convergence early-exit, strict cap on rounds (components wider than the
+cap raise instead of silently splitting); bounded graphs close locally
+on the rows their bound probe collected.  Correctness is
 driver-checked end-to-end via ``dedup_clusters_transitive`` (DuckDB
 recursive-CTE fixpoint oracle).
 """
@@ -18,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from ..functions.localrel import local_frame
 from .dedup import cluster_min_label
 
 
@@ -69,9 +72,9 @@ def pagerank(
       1-row aggregate, broadcast back and spread uniformly;
     - ``rank'(j) = (1−d)/N + d·(in(j) + dangling/N)``.
 
-    Lineage is cut with an eager ``localCheckpoint`` per iteration
-    (same discipline as ``cluster_min_label``) so the plan never grows
-    with ``iters``.  At 100 TB scale the per-iteration cost is one
+    Lineage is cut with a lazy ``localCheckpoint`` per iteration, and
+    one job after the loop materializes all rounds, so the plan never
+    grows with ``iters``.  At 100 TB scale the per-iteration cost is one
     edge-sized shuffle; ranks (|V| rows) stay partitioned by node id.
     The edge ratio table is computed once and persisted across
     iterations.
@@ -110,30 +113,21 @@ def pagerank(
     else:
         nodes = nodes.select(F.col(nodes.columns[0]).alias("id"))
 
-    # ONE job probes the bound AND fetches the node ids (r13 optimization
-    # round — the same fused limit-probe as cluster_min_label): if the
-    # node set fits the driver-iteration bound, these are exactly the ids
-    # _pagerank_bounded needs, so the separate count + collect pair
-    # disappears; past the bound the count runs as before (the probe's
-    # CollectLimit early-exits, it never scans an unbounded node set).
-    node_rows = None
-    if driver_iter_max_nodes:
-        probe = nodes.limit(driver_iter_max_nodes + 1).collect()
-        if len(probe) <= driver_iter_max_nodes:
-            node_rows = probe
-    n_nodes = len(node_rows) if node_rows is not None else nodes.count()
-    if n_nodes == 0:
-        return nodes.select(F.col("id").alias("node"), F.lit(0.0).alias("rank"))
-
     out_w = e.groupBy("src").agg(F.sum("w").alias("w_out"))
     ratio_plan = e.join(out_w, "src").select(
         "src", "dst", (F.col("w") / F.col("w_out")).alias("ratio")
     )
-
-    if node_rows is not None:
-        return _pagerank_bounded(
-            nodes, ratio_plan, n_nodes, iters, damping, node_rows=node_rows
-        )
+    if driver_iter_max_nodes:
+        # one job bounds the node set and, under the bound, fetches it
+        probe = nodes.limit(driver_iter_max_nodes + 1).collect()
+        if 0 < len(probe) <= driver_iter_max_nodes:
+            return _pagerank_bounded(nodes, probe, ratio_plan, iters, damping)
+        # an empty probe already proves the node set empty
+        n_nodes = nodes.count() if probe else 0
+    else:
+        n_nodes = nodes.count()
+    if n_nodes == 0:
+        return nodes.select(F.col("id").alias("node"), F.lit(0.0).alias("rank"))
 
     ratio = ratio_plan.persist()
     ratio.count()  # materialize once; reused every iteration
@@ -183,23 +177,18 @@ def pagerank(
 
 
 def _pagerank_bounded(
-    nodes: DataFrame,
-    ratio_plan: DataFrame,
-    n_nodes: int,
-    iters: int,
-    damping: float,
-    node_rows=None,
+    nodes: DataFrame, rows: list, ratio_plan: DataFrame, iters: int, damping: float
 ) -> DataFrame:
     """Driver-side iteration for schema-bounded aggregated graphs: ONE
     distributed job collects the (src, dst, ratio) aggregate (≤ n²
     rows for n ≤ ``driver_iter_max_nodes``), then numpy runs the same
     recurrence — identical up to float addition order, absorbed by the
     consumer-side rounding every registered query applies.
-    ``node_rows``: the caller's already-collected node rows (the fused
-    bound probe) — skips a second job over the node frame."""
+    ``rows``: the node rows the caller's bound probe collected."""
     import numpy as np
 
-    ids = [r[0] for r in (node_rows if node_rows is not None else nodes.collect())]
+    ids = [r[0] for r in rows]
+    n_nodes = len(ids)
     pos = {v: i for i, v in enumerate(ids)}
     has_out = np.zeros(n_nodes, dtype=bool)
     # endpoints outside the caller's node set mirror the distributed
@@ -244,20 +233,9 @@ def _pagerank_bounded(
             StructField("rank", DoubleType(), False),
         ]
     )
-    # Arrow-path createDataFrame (pandas input): a python-list frame
-    # scans through a pickled Python RDD with no size statistics and
-    # re-serializes per action — consumers that join/aggregate this
-    # result would plan sort-merge against it (same fix as
-    # dedup._cluster_union_find).
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "node": pd.Series(list(ids), dtype=object),
-            "rank": [float(rank[pos[v]]) for v in ids],
-        }
+    return local_frame(
+        nodes.sparkSession, [(v, float(rank[pos[v]])) for v in ids], out_schema
     )
-    return nodes.sparkSession.createDataFrame(pdf, out_schema)
 
 
 def shortest_paths(
@@ -274,8 +252,8 @@ def shortest_paths(
     bounded at ``max_iters`` hops.
 
     ``driver_max_edges``: an aggregated entity graph whose edge list
-    fits under this bound (known from the materialization count the
-    loop needs anyway) relaxes driver-side instead — the identical
+    fits under this bound (one ``limit(bound+1)`` collect of the edge
+    frame) relaxes locally instead — the identical
     synchronous Bellman–Ford recurrence on the collected (src, dst, w)
     triples, so per-path float addition order (and hence every distance)
     is bit-equal to the distributed loop (parity-pinned in
@@ -312,18 +290,11 @@ def shortest_paths(
         # edges is simply unreachable on both paths.
         .filter(F.col("w").isNotNull())
     )
-    # ONE job probes the bound AND fetches the edge triples (r13
-    # optimization round — fused limit-probe, cluster_min_label recipe):
-    # under the bound these rows ARE the driver Bellman–Ford input, so
-    # the former persist + count + collect trio collapses to one job;
-    # past the bound the CollectLimit early-exits and the distributed
-    # loop persists as before.
     if driver_max_edges:
+        # one job bounds the edge set and, under the bound, fetches it
         probe = e.limit(driver_max_edges + 1).collect()
         if len(probe) <= driver_max_edges:
-            return _shortest_paths_bounded(
-                e, sources, max_iters, edge_rows=probe
-            )
+            return _shortest_paths_bounded(e, probe, sources, max_iters)
     e = e.persist()
     e.count()  # materialize once; reused every iteration
 
@@ -362,17 +333,13 @@ def shortest_paths(
 
 
 def _shortest_paths_bounded(
-    e: DataFrame, sources: DataFrame, max_iters: int, edge_rows=None
+    e: DataFrame, rows: list, sources: DataFrame, max_iters: int
 ) -> DataFrame:
     """Driver-side synchronous Bellman–Ford on the collected edge
     triples — the same hop-bounded recurrence as the distributed loop,
     with identical per-path addition order (bit-equal distances).
-    ``edge_rows``: already-collected edge rows from the fused bound
-    probe — skips a second job over the edge frame."""
-    rows = [
-        (r["src"], r["dst"], r["w"])
-        for r in (edge_rows if edge_rows is not None else e.collect())
-    ]
+    ``rows``: the (src, dst, w) triples the caller's bound probe
+    collected."""
     dist: dict = {
         r[0]: 0.0 for r in sources.select(sources.columns[0]).collect()
     }
@@ -397,17 +364,9 @@ def _shortest_paths_bounded(
             StructField("dist", DoubleType(), False),
         ]
     )
-    # Arrow-path createDataFrame — see _pagerank_bounded for rationale.
-    import pandas as pd
-
-    items = list(dist.items())
-    pdf = pd.DataFrame(
-        {
-            "node": pd.Series([k for k, _ in items], dtype=object),
-            "dist": [float(v) for _, v in items],
-        }
+    return local_frame(
+        e.sparkSession, [(k, float(v)) for k, v in dist.items()], out_schema
     )
-    return e.sparkSession.createDataFrame(pdf, out_schema)
 
 
 def label_propagation(

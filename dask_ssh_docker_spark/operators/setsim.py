@@ -76,7 +76,7 @@ def setsim_pairs_prefix(
     re-shuffles carrying array payloads.  Above the bound the verify
     stays a shuffle join (the 100 TB shape); the decision rides the doc
     count the eager array materialization returns anyway."""
-    from .dedup import _hashed_shingles
+    from .dedup import hashed_shingles
 
     # Per-doc distinct 64-bit shingle-hash arrays, persisted BEFORE the
     # explode: exploding a computed array column with no materialization
@@ -84,8 +84,8 @@ def setsim_pairs_prefix(
     # row (measured 94 s vs 5.6 s + 0.7 s at sf1) — the cache is the
     # boundary.  The exploded rows themselves are cheap to re-derive from
     # the cached arrays, so they need no persist of their own.
-    harr = _hashed_shingles(df, text_col, id_col, shingle_k).persist()
-    sh2 = harr.select("id", F.explode("__sh").alias("__h"))
+    harr = hashed_shingles(df, text_col, id_col, shingle_k).persist()
+    sh2 = harr.select(F.col("__id").alias("id"), F.explode("__sh").alias("__h"))
     # This pipeline's stages are COMPUTE-dense per byte: the few-MB
     # prefix frame explodes to ~35M candidate pairs INSIDE the self-join
     # at sf1, which AQE (sizing by exchange INPUT bytes, under every

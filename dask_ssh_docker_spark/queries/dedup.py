@@ -152,7 +152,8 @@ def dedup_clusters_transitive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the pair generation is the documented validation-scale
     baseline; the CC loop itself is the 100 TB path (one edge-shuffle per
-    round, eager localCheckpoint lineage cuts, convergence early-exit).
+    round, lazy localCheckpoint lineage cuts materialized by one job per
+    convergence-probe block, convergence early-exit).
     ``driver_max_edges=0`` forces the DISTRIBUTED loop here — this query
     is the loop's driver-side evidence; the bounded union-find fast path
     the production pipelines take at validation scale is pytest-pinned
@@ -183,34 +184,10 @@ def dedup_clusters_minhash_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: every stage is the 100 TB shape — |docs|×bands (band_hash, id)
     tuples shuffle, exact Jaccard touches candidates only, and the CC loop
-    shuffles one edge set per round with eager checkpoint lineage cuts."""
-    from ..operators.dedup import (
-        _hashed_shingles,
-        cluster_min_label,
-        jaccard_verify,
-        minhash_candidates,
-        minhash_signatures,
-    )
-
+    shuffles one edge set per round, its lazy lineage cuts materialized
+    by one job per convergence-probe block."""
     docs = load_table(spark, sf_dir, "documents")
-    # 64-bit-hashed shingles: the whole downstream path (cache, minima,
-    # array_intersect verify) runs on longs — see _hashed_shingles
-    sh_arr = (
-        _hashed_shingles(docs, "text", "doc_id", 3)
-        .withColumnRenamed("id", "__id")
-        .persist()
-    )
-    sig = minhash_signatures(docs, "text", "doc_id", 32, 3, shingle_arrays=sh_arr)
-    cands = minhash_candidates(docs, "text", "doc_id", 32, 8, 3, sig_df=sig)
-    verified = jaccard_verify(
-        docs, cands, "text", "doc_id", 0.35, 3, shingle_df=sh_arr
-    ).persist()
-    ids = docs.select(F.col("doc_id").alias("id"))
-    out = cluster_min_label(verified.select("id_a", "id_b"), ids)
-    # cluster_min_label localCheckpoints its labels — the shingle/verify
-    # caches are dead weight from here; release them (graph.py discipline).
-    verified.unpersist()
-    sh_arr.unpersist()
+    out = minhash_dedup(docs, "text", "doc_id", threshold=0.35)
     return out.select(F.col("id").alias("doc_id"), "cluster_id").orderBy("doc_id")
 
 
@@ -396,7 +373,7 @@ def setsim_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: shuffled volume is prefix-bounded posting lists + candidate
     verification, vs the baseline's full posting-list self-join; the
     rarity order needs no global dictionary sort (per-doc window over
-    (shingle_df, shingle)).  See ``operators/setsim.py``."""
+    (shingle document frequency, shingle)).  See ``operators/setsim.py``."""
     from ..operators.setsim import setsim_pairs_prefix
 
     docs = load_table(spark, sf_dir, "documents")

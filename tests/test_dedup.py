@@ -107,9 +107,11 @@ def test_minhash_verified_pairs_match_exact(spark):
     pair must appear in the all-pairs baseline; recall should be high for
     a 0.35 threshold with 32 hashes / 8 bands."""
     from dask_ssh_docker_spark.operators.dedup import (
+        hashed_shingles,
         jaccard_pairs_exact,
         jaccard_verify,
         minhash_candidates,
+        minhash_signatures,
     )
     from dask_ssh_docker_spark.sources import load_table
 
@@ -118,11 +120,12 @@ def test_minhash_verified_pairs_match_exact(spark):
         (r.id_a, r.id_b)
         for r in jaccard_pairs_exact(docs, "text", "doc_id", 0.35).collect()
     }
-    cands = minhash_candidates(docs, "text", "doc_id")
+    sh = hashed_shingles(docs, "text", "doc_id").persist()
+    cands = minhash_candidates(minhash_signatures(sh))
     approx = {
-        (r.id_a, r.id_b)
-        for r in jaccard_verify(docs, cands, "text", "doc_id", 0.35).collect()
+        (r.id_a, r.id_b) for r in jaccard_verify(cands, sh, 0.35).collect()
     }
+    sh.unpersist()
     assert approx <= exact  # precision 1.0 by construction (verified)
     if exact:
         recall = len(approx) / len(exact)
@@ -213,6 +216,44 @@ def test_cluster_min_label_converges_on_long_chain(spark):
     )
     out = cluster_min_label(pairs, ids).toPandas()
     assert set(out["cluster_id"]) == {0}, out
+
+
+def test_cluster_min_label_reliable_checkpoint_matches_default(spark, tmp_path):
+    """The distributed loop on reliable ``checkpoint()`` cuts (the
+    ``checkpoint_dir`` path for real clusters) labels the long chain
+    exactly as the default path does."""
+    from dask_ssh_docker_spark.operators.dedup import cluster_min_label
+
+    n = 11
+    ids = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+    default = dict(cluster_min_label(pairs, ids).collect())
+    reliable = dict(
+        cluster_min_label(
+            pairs, ids, driver_max_edges=0, checkpoint_dir=str(tmp_path)
+        ).collect()
+    )
+    assert reliable == default == {i: 0 for i in range(n)}
+    assert any(p.is_file() for p in tmp_path.rglob("*"))  # files written
+
+
+def test_minhash_dedup_job_count(spark, sf_dir, spark_work):
+    """minhash_dedup build + collect at sf0.001: 10 jobs / 28 tasks.  The
+    bound probe's rows feed union-find directly, and its labels are a
+    job-free local relation."""
+    from dask_ssh_docker_spark.operators.dedup import minhash_dedup
+    from dask_ssh_docker_spark.sources import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    with spark_work() as w:
+        minhash_dedup(docs, "text", "doc_id", threshold=0.35).collect()
+    assert w.jobs == 10
+    # shuffle-stage task counts scale with the default parallelism; the
+    # count was measured at 8
+    if spark.sparkContext.defaultParallelism == 8:
+        assert w.tasks == 28
 
 
 def test_cluster_min_label_cap_raises_or_warns(spark):

@@ -116,7 +116,10 @@ def test_cosine_invariants(spark, dim, seed):
 
 
 def test_minhash_identical_texts_identical_sigs(spark):
-    from dask_ssh_docker_spark.operators.dedup import minhash_signatures
+    from dask_ssh_docker_spark.operators.dedup import (
+        hashed_shingles,
+        minhash_signatures,
+    )
 
     pdf = pd.DataFrame(
         {
@@ -124,10 +127,8 @@ def test_minhash_identical_texts_identical_sigs(spark):
             "text": ["alpha beta gamma delta", "alpha  beta GAMMA delta", "other words here now"],
         }
     )
-    sigs = {
-        r.id: tuple(r.sig)
-        for r in minhash_signatures(spark.createDataFrame(pdf), "text", "doc_id").collect()
-    }
+    sh = hashed_shingles(spark.createDataFrame(pdf), "text", "doc_id")
+    sigs = {r.id: tuple(r.sig) for r in minhash_signatures(sh).collect()}
     assert sigs[1] == sigs[2]  # normalization folds case/whitespace
     assert sigs[1] != sigs[3]
 

@@ -30,13 +30,18 @@ def test_rollup_cascade_composes_two_levels(spark):
 
 
 def test_minhash_band_validation(spark):
-    from dask_ssh_docker_spark.operators.dedup import minhash_candidates
+    from dask_ssh_docker_spark.operators.dedup import (
+        hashed_shingles,
+        minhash_candidates,
+        minhash_signatures,
+    )
 
     df = spark.createDataFrame(pd.DataFrame({"doc_id": [1], "text": ["a b c d"]}))
+    sh = hashed_shingles(df, "text", "doc_id")
     with pytest.raises(ValueError, match="bands"):
-        minhash_candidates(df, "text", "doc_id", num_hashes=8, bands=16)
+        minhash_candidates(minhash_signatures(sh, 8), num_hashes=8, bands=16)
     with pytest.raises(ValueError, match="bands"):
-        minhash_candidates(df, "text", "doc_id", num_hashes=32, bands=12)
+        minhash_candidates(minhash_signatures(sh, 32), num_hashes=32, bands=12)
 
 
 def test_decode_string_ids(spark):
@@ -127,9 +132,9 @@ def test_jaccard_filters_raw_not_rounded(spark):
     raw = 17 / 48
     thr = (raw + round(raw, 6)) / 2  # strictly between raw and its rounding
     assert raw < thr < round(raw, 6)
-    out = jaccard_verify(None, cands, "text", "doc_id", thr, shingle_df=sh)
+    out = jaccard_verify(cands, sh, thr)
     assert out.count() == 0  # raw filter drops; a rounded filter would keep
-    out2 = jaccard_verify(None, cands, "text", "doc_id", raw - 1e-9, shingle_df=sh)
+    out2 = jaccard_verify(cands, sh, raw - 1e-9)
     assert out2.count() == 1 and abs(out2.first().jaccard - round(raw, 6)) < 1e-9
 
 
@@ -178,10 +183,19 @@ def test_run_to_completion_max_rows_guard(spark):
 
 
 def test_local_frame_rejects_duplicate_field_names(spark):
-    # rows split into columns by field name: a repeated name would
-    # silently collapse two columns into one
+    # a repeated field name would make the frame's columns ambiguous by
+    # name; DDL and StructType schemas, empty rows included, all build a
+    # job-free LocalRelation
+    from pyspark.sql.types import LongType, StructField, StructType
+
     from dask_ssh_docker_spark.functions.localrel import local_frame
 
-    assert local_frame(spark, [(1, 2)], "a int, b int").collect()[0] == (1, 2)
+    ddl = local_frame(spark, [(1, 2)], "a int, b int")
+    assert ddl.collect()[0] == (1, 2)
+    empty = local_frame(spark, [], StructType([StructField("a", LongType())]))
+    assert empty.collect() == []
+    for df in (ddl, empty):  # job-free Arrow local relation, empty too
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan, plan
     with pytest.raises(ValueError, match="duplicate"):
         local_frame(spark, [(1, 2)], "a int, a int")

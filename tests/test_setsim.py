@@ -106,7 +106,7 @@ def test_prefix_plan_has_no_python_eval(spark):
 
 def _py_shingles(text: str) -> set[str]:
     """Python twin of functions.text.tokens + 3-shingling with the
-    short-doc fallback (mirrors the _SHINGLES SQL and _hashed_shingles)."""
+    short-doc fallback (mirrors the _SHINGLES SQL and hashed_shingles)."""
     import re as _re
 
     toks = _re.sub(r"\s+", " ", text.lower().strip()).split(" ")

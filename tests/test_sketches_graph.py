@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from dask_ssh_docker_spark.operators.graph import pagerank
@@ -178,6 +179,25 @@ def test_sssp_bounded_matches_distributed(spark):
     assert fast == slow  # exact float equality, not approx
     assert fast[3] == 1.5 + 0.25 + 0.125
     assert 4 not in fast  # unreachable from source
+
+
+@pytest.mark.parametrize(
+    "name, jobs, tasks",
+    [("pagerank_nation_trade", 8, 12), ("sssp_nation_trade", 8, 23)],
+)
+def test_graph_query_job_count(spark, sf_dir, spark_work, name, jobs, tasks):
+    """Build + collect at sf0.001 of the bounded graph paths: one bound
+    probe collects the rows the local iteration runs on, and the result
+    is a job-free local relation."""
+    from dask_ssh_docker_spark.queries import REGISTRY
+
+    with spark_work() as w:
+        REGISTRY[name].fn(spark, sf_dir).collect()
+    assert w.jobs == jobs
+    # shuffle-stage task counts scale with the default parallelism; the
+    # counts were measured at 8
+    if spark.sparkContext.defaultParallelism == 8:
+        assert w.tasks == tasks
 
 
 def test_pagerank_null_weights_both_paths_agree(spark):

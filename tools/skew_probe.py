@@ -76,18 +76,6 @@ def main() -> None:
     # a 10x corpus)
     only = sys.argv[3] if len(sys.argv) > 3 else None
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from dask_ssh_docker_spark.operators.dedup import minhash_candidates
-    from dask_ssh_docker_spark.operators.substring import _dup_marks
     from dask_ssh_docker_spark.session import get_session
 
     spark = get_session()
@@ -147,11 +135,9 @@ def _claims_1_2(spark, rng, n_docs, hot_frac, failures):
             StructField("sig", ArrayType(LongType())),
         ]
     )
-    sig_df = spark.createDataFrame(sig_pdf, schema)
+    sig = spark.createDataFrame(sig_pdf, schema)
 
-    cands = minhash_candidates(
-        None, "", "", num_hashes=num_hashes, bands=8, sig_df=sig_df
-    )
+    cands = minhash_candidates(sig, num_hashes=num_hashes, bands=8)
     t0 = time.time()
     plan = _finalized_plan(cands)
     wall = time.time() - t0
