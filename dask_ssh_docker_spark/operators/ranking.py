@@ -299,19 +299,15 @@ def with_global_ntiles(
     The exact-NTILE positional arithmetic runs on the collected count as
     Python-int literals, so no count broadcast appears in the plan.
 
-    r13 optimization round (guide §2.4): per-bucket offsets used to be a
-    per-spec subplan — a (bucket) groupBy of the grain, a triangular
-    broadcast self-join, and a broadcast join back — 3 exchanges and ~6
-    AQE stages PER SPEC, all to produce ≤ n_buckets integers.  They are
-    now ONE bounded histogram job shared by every spec (posexplode of the
-    per-spec bucket ids → (spec, bucket) counts, ≤ |specs|·n_buckets rows
-    collected), and each spec's offsets enter its plan as a LITERAL array
-    indexed map-side.  The final plan keeps exactly one exchange per spec
-    (the per-bucket rank window's — inherent: k distinct orderings need k
-    sorts).  Values are unchanged: the offset is the same exclusive
-    prefix-sum of exact bucket counts the triangular join produced.
-    Measured on rfm_customer_segments: 26 jobs / 53 single-task AQE
-    stages → see OPTIMIZATION_r13.md."""
+    Per-bucket offsets come from ONE bounded histogram job shared by
+    every spec (posexplode of the per-spec bucket ids → (spec, bucket)
+    counts, ≤ |specs|·n_buckets rows collected); each spec's offsets
+    enter its plan as a LITERAL array indexed map-side, the exclusive
+    prefix-sum of exact bucket counts.  The final plan keeps exactly one
+    exchange per spec: the per-bucket rank window's, inherent since k
+    distinct orderings need k sorts.  A per-spec offsets subplan (bucket
+    groupBy, triangular broadcast self-join, broadcast join back) cost
+    rfm_customer_segments 26 jobs / 53 single-task AQE stages before."""
     keyed = df
     key_cols: list[str] = []
     for i, (order, _out) in enumerate(specs):

@@ -167,13 +167,16 @@ def stream_rate_cap_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _staged_event_slices(spark: SparkSession, sf_dir: str, n_slices: int = 3) -> str:
     """Stage the events table as ``n_slices`` single-file parquet slices
     (deterministic split on event_id % n) so a file-source stream with
-    ``maxFilesPerTrigger=1`` replays it as n REAL micro-batches."""
-    import glob
+    ``maxFilesPerTrigger=1`` replays it as n REAL micro-batches.  The
+    staging is keyed on the file's size and mtime too, so a table
+    regenerated at the same path is re-staged."""
     import hashlib
     import os
     import shutil
 
-    key = hashlib.md5(f"{os.path.abspath(sf_dir)}|{n_slices}".encode()).hexdigest()[:8]
+    st = os.stat(f"{sf_dir}/events.parquet")
+    src = f"{os.path.abspath(sf_dir)}|{n_slices}|{st.st_size}|{st.st_mtime_ns}"
+    key = hashlib.md5(src.encode()).hexdigest()[:8]
     base = f"/tmp/spark_graft_mv_slices_{key}"
     done = os.path.join(base, "_STAGED")
     if not os.path.exists(done):

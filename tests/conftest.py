@@ -17,7 +17,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from dask_ssh_docker_spark.session import get_session
 
-    s = get_session("pytest", master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', 8)}]")
+    # keep every stage in the status store: past spark.ui.retainedStages
+    # (1000) it evicts skipped stages first, and the query profiler's
+    # tracer reads each job's skipped stages
+    s = get_session(
+        "pytest",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', 8)}]",
+        conf={"spark.ui.retainedStages": "100000"},
+    )
     yield s
 
 

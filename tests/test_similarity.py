@@ -207,7 +207,7 @@ def test_ivf_sample_too_small_raises(spark):
         train_centroids(df, k=16, iters=1, sample_fraction=0.05)
 
 
-def test_lsh_plan_construction_is_job_free(spark):
+def test_lsh_plan_construction_is_job_free(spark, spark_work):
     """Building the LSH operators with dim= passed (as the registered
     queries now do) must launch NO Spark job — the first() dim-inference
     round-trip is gone from the shipped path and plan construction stays
@@ -225,16 +225,10 @@ def test_lsh_plan_construction_is_job_free(spark):
     )
     corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
 
-    sc = spark.sparkContext
-    group = "lsh-build-probe"
-    sc.setJobGroup(group, "lsh plan construction probe")
-    try:
+    with spark_work() as w:
         lsh_topk(queries, corpus, k=10, bits=6, tables=32, dim=64)
         lsh_neardup_pairs(emb, threshold=0.4, dim=64)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(jobs) == [], f"LSH plan construction launched jobs: {jobs}"
+    assert w.jobs == 0, f"LSH plan construction launched {w.jobs} jobs"
 
 
 def test_arrow_bruteforce_matches_jvm_bruteforce(spark):

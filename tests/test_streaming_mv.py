@@ -141,3 +141,32 @@ def test_mv_time_travel_versions(spark, sf_dir):
     assert sum(r["n"] for r in read_mv(spark, snap).collect()) == n_total
     with pytest.raises(FileNotFoundError, match="version 9 not found"):
         read_mv(spark, snap, version=9)
+
+
+def test_staged_slices_follow_a_regenerated_events_file(spark, sf_dir, tmp_path):
+    """Rewriting ``events.parquet`` at the same path re-stages the
+    slices: the staged rows always total the current file's rows."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from dask_ssh_docker_spark.queries.streaming import _staged_event_slices
+
+    table = pq.read_table(f"{sf_dir}/events.parquet")
+    bases = set()
+
+    def staged_rows(t) -> int:
+        pq.write_table(t, tmp_path / "events.parquet")
+        base = _staged_event_slices(spark, str(tmp_path), 3)
+        bases.add(base)
+        slices = glob.glob(f"{base}/slice*.parquet")
+        return sum(pq.read_metadata(f).num_rows for f in slices)
+
+    try:
+        n = table.num_rows
+        assert staged_rows(table) == n
+        assert staged_rows(table.slice(0, n // 2)) == n // 2
+    finally:
+        for base in bases:
+            shutil.rmtree(base, ignore_errors=True)

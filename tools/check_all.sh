@@ -16,8 +16,8 @@
 # (the only gate that has ever caught a quadratic knob: sim_neardup_lsh,
 # BENCH_NOTES r10 §10; setsim routes to the zipf corpus via bench_corpus
 # so the only remaining skips are the 3 O(n²) validation baselines) and
-# the two-decade scaling probe.  Artifacts: ORACLE_SWEEP_SF10_deep.log +
-# DECADE_deep.json (rename per round when recording).  The oracle gate
+# the two-decade scaling profile.  Artifacts: ORACLE_SWEEP_SF10_deep.log +
+# DECADE_deep.jsonl (rename per round when recording).  The oracle gate
 # session already carries the 8g maxResultSize gate fix.
 set -e
 set -o pipefail  # ADVICE r11: without this the `| tee` below eats a failing
@@ -30,9 +30,14 @@ if [[ "${1:-}" == "--deep" ]]; then
     --skip-capped --zipf-dir=/root/repo/testdata_sf10_zipf/sf10 \
     2>&1 | tee ORACLE_SWEEP_SF10_deep.log
   echo "deep sweep wall: $((SECONDS - t0))s" | tee -a ORACLE_SWEEP_SF10_deep.log
-  echo "== deep: two-decade scaling probe (sf1 + sf10) =="
-  SPARK_GRAFT_DRIVER_MEM=48g python tools/decade_probe.py \
-    /root/repo/testdata_sf1/sf1 /root/repo/testdata_sf10/sf10 DECADE_deep.json
+  echo "== deep: two-decade scaling profile (sf1 + sf10) =="
+  SPARK_GRAFT_DRIVER_MEM=48g python tools/query_profile.py \
+    --sf testdata_sf1/sf1 --sf testdata_sf10/sf10 \
+    q1_pricing_summary q3_top_unshipped_orders q5_region_revenue \
+    window_cumsum resample_hourly sessionize_10m asof_backward \
+    dedup_exact_groups dedup_minhash_clusters text_quality \
+    sim_topk_bruteforce rollup_cascade_daily interpolate_time_linear \
+    text_chunk_windows text_tfidf_top_terms > DECADE_deep.jsonl
   shift
 fi
 echo "== never-checked guard =="
