@@ -25,9 +25,12 @@ running every task in Spark's Python workers, not the driver:
 
 Packing trades Spark's per-task load balancing for fewer task launches.
 It pays while node bodies are short next to Spark's per-task launch
-cost (0.15–0.25 s of a slot's time per task on a 4-core VM): a level
-of ``n > slots`` heavy nodes of uneven cost can finish up to
-``ceil(n / slots)`` times later than one partition per node would.
+cost: ≈0.03 s of a slot's time per task on a 4-core VM under the engine
+session's worker daemon, ≈0.2 s more under PySpark's own daemon, whose
+workers re-read ``pyspark.zip`` and the Spark core jar at every task
+(:mod:`.session`).  A level of ``n > slots`` heavy nodes of uneven
+cost can finish up to ``ceil(n / slots)`` times later than one
+partition per node would.
 
 Deliberate scope (PARITY.md §2.A): this is a *migration on-ramp* for the
 reference's demonstrated pattern, not a general graph scheduler — big

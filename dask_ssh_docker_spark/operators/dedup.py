@@ -369,7 +369,11 @@ def cut_lineage(
     per-run path and delete it after the job."""
     if checkpoint_dir:
         sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() != checkpoint_dir:
+        Path = sc._jvm.org.apache.hadoop.fs.Path
+        want = Path(checkpoint_dir)
+        want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+        current = sc.getCheckpointDir()  # "<qualified dir>/<uuid>" once set
+        if current is None or not Path(current).getParent().equals(want):
             sc.setCheckpointDir(checkpoint_dir)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=eager)

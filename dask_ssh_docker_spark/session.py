@@ -20,6 +20,12 @@ Defaults are tuned for analytics at scale:
 - ``spark.sql.shuffle.partitions`` sized to core count locally; on a real
   cluster AQE coalescing makes an over-provisioned value cheap, so we set
   a large initial partition number and let AQE shrink it.
+- On local masters, Python workers start through
+  ``pyworker/spark_graft_daemon.py``: PySpark's daemon with zip
+  archives re-read only when they change, not at every task's
+  ``importlib.invalidate_caches()`` (≈0.2 s of each task before).
+  Cluster masters keep PySpark's own daemon: executors on other hosts
+  need not have this package.
 """
 
 from __future__ import annotations
@@ -28,6 +34,10 @@ import os
 import re
 
 from pyspark.sql import SparkSession
+
+#: the directory of the worker daemon shim, alone, for the worker path
+_PYWORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker")
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 
 
 def _default_parallelism() -> int:
@@ -65,6 +75,9 @@ def default_conf(parallelism: int | None = None, master: str | None = None) -> d
         # via SPARK_GRAFT_DRIVER_MEM.  Cluster masters leave this to the
         # deployment (spark-submit / cluster manager owns JVM sizing).
         out["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        # the worker daemon shim (module docstring)
+        out["spark.python.daemon.module"] = "spark_graft_daemon"
+        out[_WORKER_PATH] = _PYWORKER_DIR
     out.update({
         # --- optimizer / runtime re-planning ---
         "spark.sql.adaptive.enabled": "true",
@@ -164,8 +177,10 @@ def get_session(
     )
     builder = SparkSession.builder.appName(app_name).master(master)
     merged = default_conf(master=master)
-    if conf:
-        merged.update(conf)
+    for k, v in (conf or {}).items():
+        if k == _WORKER_PATH and k in merged:  # keep the caller's path, add the shim's
+            v = os.pathsep.join((v, merged[k]))
+        merged[k] = v
     for k, v in merged.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -63,37 +63,13 @@ def combine_snapshots(
     return o.join(n, cond, "full_outer").select(*cols)
 
 
-#: target on-disk bytes per merge task (~2-4× that in memory after
-#: parquet decode) — the AQE substitute for a context where AQE is
-#: unavailable
-BYTES_PER_MERGE_PARTITION = 64 << 20
-
-
-def _read_pointer(snapshot_dir: str) -> tuple[int, str, int | None] | None:
+def _read_pointer(snapshot_dir: str) -> tuple[int, str] | None:
     p = os.path.join(snapshot_dir, "_LATEST")
     if not os.path.exists(p):
         return None
-    fields = open(p).read().strip().split("\t")
-    # r12 pointers append the snapshot's on-disk bytes (merge-width
-    # sizing); pre-r12 pointers have two fields — sizing falls back
-    nbytes = int(fields[2]) if len(fields) > 2 else None
-    return int(fields[0]), fields[1], nbytes
-
-
-def _dir_bytes(spark: SparkSession, path: str) -> int:
-    """Total bytes under ``path`` via Hadoop FS metadata — one driver-side
-    namenode/listing call, zero Spark jobs, any FS (local/HDFS/S3A)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return int(fs.getContentSummary(hpath).getLength())
-
-
-def _merge_width(spark: SparkSession, nbytes: int | None) -> int:
-    static_w = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if nbytes is None:
-        return static_w
-    return max(1, min(static_w, -(-nbytes // BYTES_PER_MERGE_PARTITION)))
+    with open(p) as f:
+        epoch, vdir = f.read().strip().split("\t")
+    return int(epoch), vdir
 
 
 def read_mv(
@@ -144,18 +120,10 @@ def incremental_agg_mv(
         part = partial_agg(batch_df)
         schema = part.schema  # pin: combine widens decimal sums by 1 digit/merge
         if ptr is not None:
-            # Size-aware merge width (r12, VERDICT r11 item 5): AQE is
-            # unavailable in the streaming context, so without this the
-            # merge join and snapshot write run at the STATIC shuffle
-            # width regardless of snapshot size — 32 near-empty tasks per
-            # epoch at bench scale (measured ~25% of the merge wall),
-            # while a 10⁸-key snapshot still gets its parallelism (the
-            # _LATEST pointer records the snapshot's on-disk BYTES;
-            # width = ceil(bytes / BYTES_PER_MERGE_PARTITION = 64 MiB)
-            # capped at the session width).
-            w = _merge_width(spark, ptr[2])
-            old = spark.read.parquet(ptr[1]).repartition(w, *keys)
-            merged = combine_snapshots(old, part.repartition(w, *keys), keys, kinds)
+            # the batch session keeps AQE, which coalesces the merge
+            # join's shuffle to the snapshot's size at run time
+            old = spark.read.parquet(ptr[1])
+            merged = combine_snapshots(old, part, keys, kinds)
             # cast back to the partial schema so every snapshot version is
             # schema-identical; callers must size decimal partials with
             # enough headroom for the running total (documented above)
@@ -164,14 +132,9 @@ def incremental_agg_mv(
             )
         vdir = os.path.join(snapshot_dir, f"v{epoch_id}")
         part.write.mode("overwrite").parquet(vdir)
-        # record the written snapshot's bytes for the NEXT epoch's merge
-        # width — FS metadata only, no extra Spark job (a persist+count
-        # variant measured +190 ms/query at bench scale, more than the
-        # narrowing saves)
-        nbytes = _dir_bytes(spark, vdir)
         tmp = os.path.join(snapshot_dir, "_LATEST.tmp")
         with open(tmp, "w") as f:
-            f.write(f"{epoch_id}\t{vdir}\t{nbytes}")
+            f.write(f"{epoch_id}\t{vdir}")
         os.replace(tmp, os.path.join(snapshot_dir, "_LATEST"))
 
     return (

@@ -239,6 +239,18 @@ def test_cluster_min_label_reliable_checkpoint_matches_default(spark, tmp_path):
     assert any(p.is_file() for p in tmp_path.rglob("*"))  # files written
 
 
+def test_cut_lineage_reuses_its_checkpoint_dir(spark, tmp_path):
+    """Spark puts a reliable checkpoint under a fresh ``<dir>/<uuid>``
+    each time the dir is set, so cuts with one ``checkpoint_dir`` must set
+    it once: two cuts leave exactly one subdirectory."""
+    from dask_ssh_docker_spark.operators.dedup import cut_lineage
+
+    df = spark.range(4)
+    for _ in range(2):
+        assert cut_lineage(df, checkpoint_dir=str(tmp_path)).count() == 4
+    assert len([p for p in tmp_path.iterdir() if p.is_dir()]) == 1
+
+
 def test_minhash_dedup_job_count(spark, sf_dir, spark_work):
     """minhash_dedup build + collect at sf0.001: 10 jobs / 28 tasks.  The
     bound probe's rows feed union-find directly, and its labels are a

@@ -143,6 +143,31 @@ def test_mv_time_travel_versions(spark, sf_dir):
         read_mv(spark, snap, version=9)
 
 
+def test_foreach_batch_plans_run_under_aqe(spark, tmp_path):
+    """A ``foreachBatch`` function's frames plan under AQE: the batch
+    session keeps ``spark.sql.adaptive.enabled`` and an aggregate over the
+    batch is an ``AdaptiveSparkPlan``, so the MV merge's shuffle is
+    coalesced at run time like any batch query's."""
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    seen = []
+
+    def probe(batch_df, epoch_id):
+        agg = batch_df.groupBy((F.col("id") % 3).alias("k")).count()
+        plan = agg._jdf.queryExecution().executedPlan().nodeName()
+        seen.append((batch_df.sparkSession.conf.get("spark.sql.adaptive.enabled"), plan))
+
+    q = (
+        spark.readStream.schema("id long").parquet(src)
+        .writeStream.foreachBatch(probe)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert seen == [("true", "AdaptiveSparkPlan")]
+
+
 def test_staged_slices_follow_a_regenerated_events_file(spark, sf_dir, tmp_path):
     """Rewriting ``events.parquet`` at the same path re-stages the
     slices: the staged rows always total the current file's rows."""

@@ -146,15 +146,6 @@ def variant_sections(spark, sf_dir: str) -> list[str]:
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    out.append(
-        "## streaming MV merge width (no plan — a repartition count)\n\n"
-        "The r12 size-aware MV merge (`streaming/mv.py`) is not a plan\n"
-        "shape: each epoch's merge/write repartitions to\n"
-        "ceil(snapshot_bytes / 64 MiB) read from the `_LATEST` pointer\n"
-        "(one FS metadata call) — the AQE substitute inside foreachBatch,\n"
-        "where Spark disables AQE. Width 1 at bench scale, real\n"
-        "parallelism at a 10⁸-key snapshot.\n"
-    )
     return out
 
 
