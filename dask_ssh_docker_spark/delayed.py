@@ -25,8 +25,10 @@ running every task in Spark's Python workers, not the driver:
 
 Packing trades Spark's per-task load balancing for fewer task launches.
 It pays while node bodies are short next to Spark's per-task launch
-cost: ≈0.03 s of a slot's time per task on a 4-core VM under the engine
-session's worker daemon, ≈0.2 s more under PySpark's own daemon, whose
+cost: ≈0.011 s of a slot's time per task on a 4-core VM in an engine
+session on a local master (its worker daemon, over Unix sockets).  A
+session the engine did not start pays ≈0.02 s more for loopback TCP's
+delayed-ACK stall and ≈0.2 s more for PySpark's own daemon, whose
 workers re-read ``pyspark.zip`` and the Spark core jar at every task
 (:mod:`.session`).  A level of ``n > slots`` heavy nodes of uneven
 cost can finish up to ``ceil(n / slots)`` times later than one

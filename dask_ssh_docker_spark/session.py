@@ -26,18 +26,40 @@ Defaults are tuned for analytics at scale:
   ``importlib.invalidate_caches()`` (≈0.2 s of each task before).
   Cluster masters keep PySpark's own daemon: executors on other hosts
   need not have this package.
+- On local masters, :func:`get_session` also sets
+  ``spark.python.unix.domain.socket.enabled=true`` and
+  ``spark.python.unix.domain.socket.dir``: the worker daemon, its
+  workers and the driver's collect and accumulator servers talk over
+  Unix-domain sockets, not loopback TCP, where Nagle's algorithm and
+  delayed ACKs stalled every Python task ≈40 ms (the worker waiting for
+  the task's input behind its command).  PySpark skips
+  its shared-secret handshake on these sockets, so they live in a
+  directory only this user can enter (:func:`_socket_dir`, mode 0700,
+  one per process, removed at exit), never loose in a shared temp dir.
+  Cluster masters keep TCP: the directory does not exist on executor
+  hosts.  A caller's value for either conf wins.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import re
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 #: the directory of the worker daemon shim, alone, for the worker path
 _PYWORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker")
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+_UDS = "spark.python.unix.domain.socket.enabled"
+_UDS_DIR = "spark.python.unix.domain.socket.dir"
+#: a socket path must fit AF_UNIX's 108-byte ``sun_path`` with its NUL
+_SOCKET_PATH_MAX = 107
+#: what Spark and PySpark append to the socket dir: ``/.<uuid4>.sock``
+_SOCKET_NAME_LEN = len("/.00000000-0000-0000-0000-000000000000.sock")
 
 
 def _default_parallelism() -> int:
@@ -158,6 +180,37 @@ def master_from_hosts(hosts: list[str], port: int = 7077) -> str:
     return f"spark://{hosts[0]}:{port}"
 
 
+@functools.cache
+def _socket_dir() -> str:
+    """This process's private directory for Python worker sockets: made
+    once (``mkdtemp``: mode 0700, owned by this user), removed at exit.
+    It goes under the temp dir when every socket path still fits
+    AF_UNIX's limit there, else under ``/tmp`` (a deep ``TMPDIR``)."""
+    prefix = "spark-graft-"  # mkdtemp appends 8 random characters
+    root = tempfile.gettempdir()
+    longest = len(os.fsencode(os.path.join(root, prefix))) + 8 + _SOCKET_NAME_LEN
+    if longest > _SOCKET_PATH_MAX:
+        root = "/tmp"
+    path = tempfile.mkdtemp(prefix=prefix, dir=root)
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
+def _session_conf(master: str, conf: dict[str, str] | None = None) -> dict[str, str]:
+    """The conf :func:`get_session` starts ``master`` with: the engine
+    defaults, the caller's ``conf`` over them, and on local masters the
+    Unix-domain-socket transport (module docstring) unless the caller
+    turned it off.  Makes the socket directory on first local use."""
+    merged = default_conf(master=master)
+    for k, v in (conf or {}).items():
+        if k == _WORKER_PATH and k in merged:  # keep the caller's path, add the shim's
+            v = os.pathsep.join((v, merged[k]))
+        merged[k] = v
+    if master.startswith("local") and merged.setdefault(_UDS, "true").lower() == "true":
+        merged.setdefault(_UDS_DIR, _socket_dir())
+    return merged
+
+
 def get_session(
     app_name: str = "spark-graft",
     master: str | None = None,
@@ -176,11 +229,7 @@ def get_session(
         else "local[*]"
     )
     builder = SparkSession.builder.appName(app_name).master(master)
-    merged = default_conf(master=master)
-    for k, v in (conf or {}).items():
-        if k == _WORKER_PATH and k in merged:  # keep the caller's path, add the shim's
-            v = os.pathsep.join((v, merged[k]))
-        merged[k] = v
+    merged = _session_conf(master, conf)
     for k, v in merged.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

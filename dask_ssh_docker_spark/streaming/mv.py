@@ -8,9 +8,9 @@ Per micro-batch:
 
 1. aggregate the batch to per-key partials (map-side combine inside the
    batch — only the partial frame shuffles, never raw rows);
-2. full-outer join the partials against the current snapshot and combine
-   mergeable metrics (sum/count → ``+``, min → ``least``, max →
-   ``greatest``);
+2. union the partials with the current snapshot and group by the keys,
+   combining mergeable metrics (sum/count → ``sum``, min → ``min``, max
+   → ``max``);
 3. write the merged snapshot to a NEW version directory and atomically
    swing the ``_LATEST`` pointer (``os.replace``).
 
@@ -19,13 +19,13 @@ epoch (crash between snapshot write and checkpoint commit) sees
 ``pointer_epoch >= epoch_id`` and skips — the merge is never applied
 twice.  A real table format (Delta/Iceberg) replaces the pointer dance
 with ACID commits; the per-batch *plan* — partial agg + key-partitioned
-merge join — is identical.
+merge — is identical.
 
 Scale shape (100 TB): per batch, one partial-agg shuffle over the batch
-(bounded by batch size) + one key-partitioned merge join against the
-snapshot.  Snapshot size is key-cardinality, not stream length; combine
-functions must be commutative+associative, so batch arrival order can't
-change the result.
+(bounded by batch size) + one key-partitioned aggregate over the batch's
+partials and the snapshot.  Snapshot size is key-cardinality, not
+stream length; combine functions must be commutative+associative, so
+batch arrival order can't change the result.
 """
 
 from __future__ import annotations
@@ -36,31 +36,24 @@ from collections.abc import Callable, Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_KINDS = ("sum", "count", "min", "max")
+#: each mergeable kind's combining aggregate (counts add up like sums)
+_MERGE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
 
 
 def combine_snapshots(
     old: DataFrame, new: DataFrame, keys: list[str], kinds: Mapping[str, str]
 ) -> DataFrame:
-    """Merge two per-key partial-aggregate frames (same schema): keys are
-    coalesced, each metric combined per its algebraic kind."""
-    o, n = old.alias("o"), new.alias("n")
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}"))
-    cols = [F.coalesce(F.col(f"n.{k}"), F.col(f"o.{k}")).alias(k) for k in keys]
+    """Merge two per-key partial-aggregate frames (same columns, each key
+    at most once per frame): one row per key, each metric combined per
+    its algebraic kind.  SQL aggregates skip NULLs and ``groupBy`` puts
+    NULL keys in one group, so a metric NULL on one side keeps the other
+    side's value and NULL keys merge with each other."""
+    aggs = []
     for name, kind in kinds.items():
-        if kind not in _KINDS:
+        if kind not in _MERGE:
             raise ValueError(f"unsupported merge kind {kind!r} for {name!r}")
-        a, b = F.col(f"o.{name}"), F.col(f"n.{name}")
-        if kind in ("sum", "count"):
-            c = F.when(a.isNull(), b).when(b.isNull(), a).otherwise(a + b)
-        elif kind == "min":
-            c = F.least(a, b)  # least/greatest skip NULLs in Spark SQL
-        else:
-            c = F.greatest(a, b)
-        cols.append(c.alias(name))
-    return o.join(n, cond, "full_outer").select(*cols)
+        aggs.append(_MERGE[kind](name).alias(name))
+    return old.unionByName(new).groupBy(*keys).agg(*aggs)
 
 
 def _read_pointer(snapshot_dir: str) -> tuple[int, str] | None:
@@ -118,11 +111,12 @@ def incremental_agg_mv(
         if ptr is not None and ptr[0] >= epoch_id:
             return  # replayed epoch: snapshot already includes this batch
         part = partial_agg(batch_df)
-        schema = part.schema  # pin: combine widens decimal sums by 1 digit/merge
+        schema = part.schema  # pin: combine widens decimal sums at every merge
         if ptr is not None:
-            # the batch session keeps AQE, which coalesces the merge
-            # join's shuffle to the snapshot's size at run time
-            old = spark.read.parquet(ptr[1])
+            # every snapshot has the partial schema (the cast below), so
+            # no schema-inference job; the batch session keeps AQE, which
+            # coalesces the merge's shuffle to the snapshot's size
+            old = spark.read.schema(schema).parquet(ptr[1])
             merged = combine_snapshots(old, part, keys, kinds)
             # cast back to the partial schema so every snapshot version is
             # schema-identical; callers must size decimal partials with

@@ -1,18 +1,24 @@
-"""The Python worker daemon shim (``pyworker/spark_graft_daemon.py``).
+"""How the engine session runs Python workers on local masters.
 
-PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
-every task; before CPython 3.13 each ``zipimporter`` then re-reads its
-archive's central directory (``pyspark.zip`` and the Spark core jar head
-the worker path).  On local masters the engine session starts workers
-through a daemon that re-reads an archive only when it changed on disk.
+- The worker daemon shim (``pyworker/spark_graft_daemon.py``).  PySpark's
+  worker calls ``importlib.invalidate_caches()`` at the start of every
+  task; before CPython 3.13 each ``zipimporter`` then re-reads its
+  archive's central directory (``pyspark.zip`` and the Spark core jar
+  head the worker path).  The shim re-reads an archive only when it
+  changed on disk.
+- The transport: Unix-domain sockets in a private per-process directory,
+  not loopback TCP.
+
 These pins are deterministic: they check which directory object each
-importer holds, not how long a task takes."""
+importer holds and which socket each task talks over, not how long a
+task takes."""
 
 from __future__ import annotations
 
 import importlib.util
 import json
 import os
+import stat
 import subprocess
 import sys
 import zipfile
@@ -20,7 +26,16 @@ import zipimport
 
 import pytest
 
-from dask_ssh_docker_spark.session import _PYWORKER_DIR, default_conf
+from dask_ssh_docker_spark.session import (
+    _PYWORKER_DIR,
+    _SOCKET_NAME_LEN,
+    _SOCKET_PATH_MAX,
+    _UDS,
+    _UDS_DIR,
+    _session_conf,
+    _socket_dir,
+    default_conf,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -97,8 +112,62 @@ def test_cluster_masters_keep_pysparks_daemon():
     assert "spark.executorEnv.PYTHONPATH" not in cluster
 
 
+def test_engine_tasks_talk_over_the_sessions_unix_socket(spark):
+    def task_transport(_):  # nested: pickled by value to the worker
+        import os
+        import socket
+
+        names = set()
+        for fd in os.listdir("/proc/self/fd"):
+            try:
+                fd = os.dup(int(fd))
+            except OSError:
+                continue  # the listing's own fd, closed by now
+            try:
+                sock = socket.socket(fileno=fd)
+            except OSError:
+                os.close(fd)
+                continue  # not a socket
+            with sock:
+                if sock.family == socket.AF_UNIX:
+                    names.add(sock.getsockname())
+        yield {
+            "enabled": os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", ""),
+            "dir": os.environ.get("PYTHON_WORKER_FACTORY_SOCK_DIR"),
+            "sockets": sorted(names),
+        }
+
+    sock_dir = spark.conf.get(_UDS_DIR)
+    assert sock_dir == _socket_dir()
+    [seen] = spark.sparkContext.parallelize([0], 1).mapPartitions(task_transport).collect()
+    assert seen["enabled"].lower() == "true"
+    assert seen["dir"] == sock_dir
+    assert seen["sockets"], seen
+    assert {os.path.dirname(s) for s in seen["sockets"]} == {sock_dir}
+
+
+def test_socket_dir_is_private_and_every_socket_path_fits(spark):
+    st = os.stat(spark.conf.get(_UDS_DIR))
+    assert stat.S_IMODE(st.st_mode) == 0o700
+    assert st.st_uid == os.getuid()
+    assert len(os.fsencode(_socket_dir())) + _SOCKET_NAME_LEN <= _SOCKET_PATH_MAX
+
+
+def test_unix_sockets_on_local_masters_only_and_caller_wins():
+    assert _UDS not in default_conf(master="local[2]")  # the transport is get_session's
+    local = _session_conf("local[2]")
+    assert local[_UDS] == "true"
+    assert local[_UDS_DIR] == _socket_dir()
+    cluster = _session_conf("spark://h:7077")
+    assert _UDS not in cluster and _UDS_DIR not in cluster
+    off = _session_conf("local[2]", {_UDS: "false"})
+    assert off[_UDS] == "false" and _UDS_DIR not in off
+    mine = _session_conf("local[2]", {_UDS_DIR: "/run/mine"})
+    assert mine[_UDS] == "true" and mine[_UDS_DIR] == "/run/mine"
+
+
 SCRIPT = """
-import json, sys
+import json, os, sys
 sys.path.insert(0, {repo!r})
 from dask_ssh_docker_spark.delayed import delayed
 from dask_ssh_docker_spark.session import get_session
@@ -106,34 +175,42 @@ spark = get_session(master="local[2]",
                     conf={{"spark.executorEnv.PYTHONPATH": {caller!r}}})
 
 def worker():
-    import sys
+    import os, sys
     import caller_mod
-    return caller_mod.VALUE, sys.argv[0], sys.path
+    sock_dir = os.environ.get("PYTHON_WORKER_FACTORY_SOCK_DIR")
+    return caller_mod.VALUE, sys.argv[0], sys.path, sock_dir, os.listdir(sock_dir)
 
 def batches(it):
     for pdf in it:
         yield pdf.assign(v=pdf.id * 2)
 
-value, daemon, path = delayed(worker)().compute()
+value, daemon, path, task_dir, sockets = delayed(worker)().compute()
 total = sum(r.v for r in spark.range(10).mapInPandas(batches, "id long, v long").collect())
-print("RESULT", json.dumps(dict(value=value, daemon=daemon, path=path, total=total)))
+sock_dir = spark.conf.get("spark.python.unix.domain.socket.dir")
+print("RESULT", json.dumps(dict(value=value, daemon=daemon, path=path, total=total,
+                                tmpdir=os.environ["TMPDIR"], sock_dir=sock_dir,
+                                task_dir=task_dir, sockets=sockets)))
 spark.stop()
 """
 
 
 @pytest.fixture(scope="module")
 def foreign_cwd_run(tmp_path_factory):
-    """One engine session started from ``/tmp`` with ``PYTHONPATH`` unset
-    and a caller-supplied worker path holding ``caller_mod``."""
+    """One engine session started from ``/tmp`` with ``PYTHONPATH`` unset,
+    a ``TMPDIR`` deeper than the benchmark's per-run one, and a
+    caller-supplied worker path holding ``caller_mod``."""
     caller = tmp_path_factory.mktemp("caller_path")
     (caller / "caller_mod.py").write_text("VALUE = 42\n")
+    deep = tmp_path_factory.mktemp("t" * 40) / ("d" * 40)
+    deep.mkdir()
     proc = subprocess.run(
         [sys.executable, "-c", SCRIPT.format(repo=REPO, caller=str(caller))],
         cwd="/tmp",
         capture_output=True,
         text=True,
         timeout=600,
-        env={k: v for k, v in os.environ.items() if k != "PYTHONPATH"},
+        env={**{k: v for k, v in os.environ.items() if k != "PYTHONPATH"},
+             "TMPDIR": str(deep)},
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     [line] = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
@@ -151,3 +228,13 @@ def test_caller_worker_path_is_kept_and_extended(foreign_cwd_run):
     assert out["value"] == 42
     path = out["path"]
     assert path.index(caller) < path.index(_PYWORKER_DIR)
+
+
+def test_deep_tmpdir_sockets_fit_in_a_private_dir_removed_at_exit(foreign_cwd_run):
+    _, out = foreign_cwd_run
+    assert len(os.fsencode(out["tmpdir"])) > 90  # beyond the benchmark's ≈61 bytes
+    sock_dir = out["sock_dir"]
+    assert out["task_dir"] == sock_dir
+    assert len(os.fsencode(sock_dir)) + _SOCKET_NAME_LEN <= _SOCKET_PATH_MAX
+    assert out["sockets"] and all(s.endswith(".sock") for s in out["sockets"])
+    assert not os.path.exists(sock_dir)

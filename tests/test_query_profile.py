@@ -56,6 +56,15 @@ def test_stream_micro_batch_jobs_are_counted(records, spark, sf_dir, spark_work)
     assert any("batch =" in (j["desc"] or "") for j in _jobs(rec))
 
 
+def test_stream_mv_runs_at_most_ten_jobs(records):
+    """Three micro-batches: the first partial-aggregates and writes (2
+    jobs), each later one also unions the snapshot in and re-aggregates
+    (3: the snapshot is read with its known schema, no inference job);
+    then ``read_mv`` infers the result's schema (1) and the write runs
+    (1).  A full outer merge join with schema inference ran 14."""
+    assert len(_jobs(records["stream_mv_user_totals"])) <= 10
+
+
 def test_lazy_query_has_no_eager_jobs(records):
     rec = records["text_quality"]
     assert rec["eager_jobs"] == [] and rec["exec_jobs"]
