@@ -1,9 +1,9 @@
-"""Persisted ANN index (VERDICT r11 item 4): save/load for the IVF-PQ
-and LSH indexes so fit-once/probe-many holds ACROSS sessions.  The fit
-costs an order of magnitude more than a probe (BENCH_NOTES r11: fit
-15.9 s vs 1.37 s warm probe at 200k vectors); a fresh session that loads
-the index pays a load of seconds, never the fit (BENCH_NOTES r13: 6.4 s
-cold load of a grown 200k-vector index).
+"""Persisted ANN index: save/load for the IVF-PQ and LSH indexes so
+fit-once/probe-many holds ACROSS sessions.  The fit costs an order of
+magnitude more than a probe (BENCH_NOTES: fit 15.9 s vs 1.37 s warm
+probe at 200k vectors); a fresh session that loads the index pays a
+load of seconds, never the fit (BENCH_NOTES: 6.4 s cold load of a grown
+200k-vector index).
 
 Layout (all Spark parquet writes — works on any Hadoop-FS path: local,
 HDFS, S3):
@@ -35,12 +35,13 @@ pair instead of mis-probing.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import asdict, dataclass, fields, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ivfpq import IVFPQModel, coarse_k_for, encode_ivfpq, ivfpq_topk
+from .similarity import LSHModel, lsh_bucketed, lsh_probe
 
 FORMAT_VERSION = 1
 
@@ -81,7 +82,7 @@ class IvfPqIndex:
     model: IVFPQModel
     index: DataFrame  # (centroid_id, <id_col>, codes)
     id_col: str
-    #: corpus size the centroids were trained on (None for pre-r13 indexes)
+    #: corpus size the centroids were trained on (None when meta lacks it)
     fitted_rows: int | None = None
 
 
@@ -167,7 +168,7 @@ def append_ivfpq_index(
     centroids), so probe correctness degrades only through (a) residual
     quantization error growing as the corpus drifts from the trained
     distribution and (b) list occupancy n/k drifting past the ⌈√n⌉ cost
-    law.  At 2× growth BENCH_NOTES r13 measured no recall loss from
+    law.  At 2× growth BENCH_NOTES measured no recall loss from
     (a); check ``refit_recommended`` after appends and refit when it
     fires.  Returns the grown index (same model, re-read codes)."""
     idx = load_ivfpq_index(spark, path)
@@ -179,7 +180,7 @@ def append_ivfpq_index(
 #: ``refit_recommended`` fires when ⌈√n_now⌉ exceeds this multiple of the
 #: fitted k_coarse — i.e. when the corpus has grown past ~factor² × the
 #: fitted size and the ⌈√n⌉ sizing law (coarse_k_for) has drifted >2×.
-#: Measured basis (BENCH_NOTES r13, 100k→200k appends at sf10): at 2×
+#: Measured basis (BENCH_NOTES, 100k→200k appends at sf10): at 2×
 #: growth on stale centroids recall@10 holds (the encode step still
 #: assigns true nearest lists), while ADC scan cost per probe grows
 #: linearly with occupancy n/k — so the trigger is COST-driven at 4×
@@ -239,60 +240,36 @@ def ivfpq_probe(
 @dataclass(frozen=True)
 class LshIndex:
     buckets: DataFrame  # (<id_col>, bucket, table_idx)
-    bits: int
-    tables: int
-    seed: int
-    dim: int
+    model: LSHModel
     id_col: str
 
 
 def save_lsh_index(
     path: str,
     corpus: DataFrame,
+    model: LSHModel,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bits: int = 8,
-    tables: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
 ) -> None:
     """Bucket the corpus once and persist (id, table_idx, bucket),
     partitioned by ``table_idx``.  Hyperplanes are NOT stored — they are
-    a pure function of (dim, bits, tables, seed), all recorded in meta,
-    so the probe side regenerates them bit-identically."""
-    from .similarity import lsh_bucketed
-
-    if dim is None:
-        raise ValueError("save_lsh_index requires dim= (lsh_bucketed rationale)")
-    bucketed = lsh_bucketed(
-        corpus, id_col, vec_col, bits=bits, tables=tables, seed=seed, dim=dim
-    ).select(id_col, "table_idx", "bucket")
+    a pure function of the model's (dim, bits, tables, seed), all
+    recorded in meta, so the probe side regenerates them bit-identically."""
+    bucketed = lsh_bucketed(corpus, id_col, vec_col, model).select(
+        id_col, "table_idx", "bucket"
+    )
     bucketed.write.mode("overwrite").partitionBy("table_idx").parquet(
         f"{path}/buckets"
     )
-    _write_meta(
-        corpus.sparkSession,
-        path,
-        "lsh",
-        {
-            "bits": bits,
-            "tables": tables,
-            "seed": seed,
-            "dim": dim,
-            "id_col": id_col,
-        },
-    )
+    _write_meta(corpus.sparkSession, path, "lsh", {**asdict(model), "id_col": id_col})
 
 
 def load_lsh_index(spark: SparkSession, path: str) -> LshIndex:
     params = _read_meta(spark, path, "lsh")
     return LshIndex(
         buckets=spark.read.parquet(f"{path}/buckets"),
-        bits=int(params["bits"]),
-        tables=int(params["tables"]),
-        seed=int(params["seed"]),
-        dim=int(params["dim"]),
+        model=LSHModel(**{f.name: int(params[f.name]) for f in fields(LSHModel)}),
         id_col=str(params["id_col"]),
     )
 
@@ -305,48 +282,10 @@ def lsh_probe_topk(
     query_id: str = "query_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Top-k from a loaded LSH index: bucket the QUERIES with the
-    regenerated hyperplanes, join against the persisted corpus buckets
-    (ids only move — ``lsh_topk``'s late-materialization shape), then
-    exact-score candidates against the source corpus.  Output matches
-    ``lsh_topk`` at identical (bits, tables, seed, dim) row-for-row —
-    the scoring/rank/round pipeline below mirrors it expression for
-    expression."""
-    from pyspark.sql import Window
-
-    from ..functions.vector import cosine_similarity
-    from .similarity import lsh_bucketed
-
-    corpus_id = idx.id_col
-    qb = lsh_bucketed(
-        queries,
-        query_id,
-        vec_col,
-        bits=idx.bits,
-        tables=idx.tables,
-        seed=idx.seed,
-        dim=idx.dim,
-    ).select(query_id, "table_idx", "bucket")
-    cands = (
-        qb.join(idx.buckets, ["table_idx", "bucket"])
-        .select(query_id, corpus_id)
-        .dropDuplicates([query_id, corpus_id])
-        .join(
-            queries.select(query_id, F.col(vec_col).alias("__qvec"))
-            .dropDuplicates([query_id]),
-            query_id,
-        )
-        .join(
-            corpus.select(corpus_id, F.col(vec_col).alias("__cvec"))
-            .dropDuplicates([corpus_id]),
-            corpus_id,
-        )
-    )
-    sim = cosine_similarity("__qvec", "__cvec")
-    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    return (
-        cands.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, F.round("sim", 6).alias("sim"), "rank")
+    """Top-k from a loaded LSH index: ``lsh_probe`` against the persisted
+    corpus buckets, exact-scoring candidates against the source corpus.
+    Output equals ``lsh_topk`` under the same model row-for-row — both
+    are the one probe path."""
+    return lsh_probe(
+        queries, idx.buckets, corpus, idx.model, k, query_id, idx.id_col, vec_col
     )

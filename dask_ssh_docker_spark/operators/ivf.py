@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.localrel import local_frame
-from ..functions.vector import cosine_similarity
 from .pq import _nearest_rows, _rows_tensor, _sub_sq_dist, _tensor_rows
+from .similarity import _cosine_topk
 
 
 @dataclass(frozen=True, eq=False)
@@ -225,33 +225,26 @@ def ivf_topk(
 ) -> DataFrame:
     """Top-k cosine neighbors probing only the ``nprobe`` nearest inverted
     lists per query."""
-    q = queries.select(F.col(query_id), F.col(vec_col).alias("__qv"))
+    q = queries.select(F.col(query_id), F.col(vec_col).alias("__qvec"))
     centroids = model.frame(queries.sparkSession)
     qc = q.crossJoin(F.broadcast(centroids)).select(
         query_id,
-        "__qv",
+        "__qvec",
         "centroid_id",
         _sub_sq_dist(
-            F.transform("__qv", lambda x: x.cast("double")), F.col("centroid")
+            F.transform("__qvec", lambda x: x.cast("double")), F.col("centroid")
         ).alias("d"),
     )
     w = Window.partitionBy(query_id).orderBy(F.asc("d"), F.asc("centroid_id"))
     probes = (
         qc.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= nprobe)
-        .select(query_id, "__qv", "centroid_id")
+        .select(query_id, "__qvec", "centroid_id")
     )
     cands = probes.join(index, "centroid_id").select(
-        query_id, "__qv", F.col(corpus_id), F.col(vec_col).alias("__cv")
+        query_id, "__qvec", F.col(corpus_id), F.col(vec_col).alias("__cvec")
     )
-    sim = cosine_similarity("__qv", "__cv")
-    w2 = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
-    return (
-        cands.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, F.round("sim", 6).alias("sim"), "rank")
-    )
+    return _cosine_topk(cands, query_id, corpus_id, k)
 
 
 # This module ships closures to Python workers; make them self-contained

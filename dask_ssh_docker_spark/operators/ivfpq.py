@@ -56,6 +56,7 @@ from .pq import (
     _exact_rerank,
     _kmeans_subspaces,
     _nearest_rows,
+    _pq_luts,
     _subspace_codes,
     _train_sample,
 )
@@ -78,8 +79,8 @@ class IVFPQModel:
 
 def coarse_k_for(n_rows: int, floor_rows: int = 16_384, floor_k: int = 16) -> int:
     """Corpus-scaled coarse-list count: ``k = ⌈√n⌉`` above the validation
-    floor (VERDICT r10 item 6 — the scaling law that makes probe cost
-    SUB-linear in the corpus at fixed nprobe).
+    floor — the scaling law that makes probe cost SUB-linear in the
+    corpus at fixed nprobe.
 
     With k lists and balanced occupancy, each query's ADC pass scans
     ``nprobe · n/k`` codes.  At FIXED k the scan is linear in n — IVF
@@ -89,8 +90,9 @@ def coarse_k_for(n_rows: int, floor_rows: int = 16_384, floor_k: int = 16) -> in
     corpus-scaled bits.  The fit side pays ``O(n·k·iters)`` ONCE per
     corpus (distributed Lloyd) and is amortized across every query
     batch — the fit-once/probe-many contract measured in BENCH_NOTES
-    r11.  The ≤ ``floor_rows`` floor keeps every validation corpus on
-    the historical k=16 config (recall pins at sf0.1 use nprobe=12/16 —
+    (fit 15.9 s vs 1.37 s warm probe at 200k vectors).  The
+    ≤ ``floor_rows`` floor keeps every validation corpus on k=16
+    (recall pins at sf0.1 use nprobe=12/16 —
     a deliberate 75% scan of isotropic noise, the adversarial corpus);
     recall at fixed nprobe on REAL clustered embeddings is the quantity
     production tunes nprobe against — this helper bounds COST, the
@@ -118,19 +120,25 @@ def probe_scan_rows(
     """Total code rows the ADC pass scans for this query frame — the
     deterministic cost metric behind the ``coarse_k_for`` law (sum over
     queries of the probed lists' occupancies).  Driver-side probe
-    selection mirrors ``ivfpq_topk``'s (same argsort tie-break)."""
+    selection is ``ivfpq_topk``'s own (``_probes``)."""
     C = model.C
     occupancy = {
         r["centroid_id"]: r["cnt"]
         for r in index.groupBy("centroid_id").agg(F.count("*").alias("cnt")).collect()
     }
-    total = 0
-    for r in queries.select(query_vec).collect():
-        q = np.asarray(r[0], dtype=np.float64)
-        d2 = ((q[None, :] - C) ** 2).sum(axis=1)
-        for cid in np.argsort(d2, kind="stable")[:nprobe]:
-            total += occupancy.get(int(cid), 0)
-    return total
+    q = np.asarray(
+        [r[0] for r in queries.select(query_vec).collect()], dtype=np.float64
+    ).reshape(-1, C.shape[1])
+    return sum(occupancy.get(int(cid), 0) for cid in _probes(q, C, nprobe).ravel())
+
+
+def _probes(q: np.ndarray, C: np.ndarray, nprobe: int) -> np.ndarray:
+    """(|Q|, ≤nprobe) ids of the coarse lists each query row of ``q``
+    probes: nearest centroids by squared L2, one (|Q|, k, dim) broadcast
+    (the query frame is bounded), stable argsort so ties go to the
+    lowest cid."""
+    d2 = ((q[:, None] - C[None]) ** 2).sum(-1)
+    return np.argsort(d2, axis=1, kind="stable")[:, :nprobe]
 
 
 def train_ivfpq(
@@ -219,7 +227,13 @@ def ivfpq_topk(
 ) -> DataFrame:
     """(query_id, vec_id, dist|approx_dist, rank) — ADC top-k over the
     ``nprobe`` probed lists; with ``corpus`` given, exact re-rank of the
-    ``k·expand`` ADC shortlist (the production shape)."""
+    ``k·expand`` ADC shortlist (the production shape).
+
+    Residual LUTs come from ``pq._pq_luts``, the one LUT builder: each
+    cell is the left fold ``_sub_sq_dist`` uses.  Below 8 dims per
+    subspace that is bit-equal to numpy's ``((r − c)**2).sum(-1)``; at
+    8 or more numpy sums pairwise, so there the left fold may differ
+    from it in the last ulp (pinned in tests/test_ivfpq.py)."""
     C, cents = model.ivf.C, model.pq.codebooks
     m, n_cids, subdim = cents.shape
     qid_type = queries.schema[query_id].dataType.simpleString()
@@ -229,28 +243,24 @@ def ivfpq_topk(
     # and, with ``corpus``, the exact re-rank's query side.
     q_sel = queries.select(query_id, query_vec)
     q_rows = q_sel.collect()
-    out_q, out_c, out_l = [], [], []
-    for row in q_rows:
-        qid, qv = row[0], row[1]
-        q = np.asarray(qv, dtype=np.float64)
-        d2 = ((q[None, :] - C) ** 2).sum(axis=1)
-        probes = np.argsort(d2, kind="stable")[:nprobe]  # ties->low cid
-        for cid in probes:
-            r = (q - C[cid]).reshape(m, subdim)
-            lut = ((r[:, None, :] - cents) ** 2).sum(-1)  # (m, n_cids)
-            out_q.append(qid)
-            out_c.append(int(cid))
-            out_l.append([float(v) for v in lut.reshape(-1)])
+    q = np.asarray([r[1] for r in q_rows], dtype=np.float64).reshape(-1, C.shape[1])
+    probes = _probes(q, C, nprobe)  # (|Q|, nprobe)
+    resid = (q[:, None, :] - C[probes]).reshape(probes.size, m, subdim)
+    lut_rows = _pq_luts(resid, cents).reshape(probes.size, m * n_cids).tolist()
+    qidx = np.repeat(np.arange(len(q_rows)), probes.shape[1])
     luts = local_frame(
         queries.sparkSession,
-        list(zip(out_q, out_c, out_l)),
+        [
+            (q_rows[i][0], int(c), lut)
+            for i, c, lut in zip(qidx, probes.ravel(), lut_rows)
+        ],
         f"{query_id} {qid_type}, centroid_id int, lut array<double>",
     )
     # Restrict the code index to the ≤|Q|·nprobe probed lists before the
     # join: a no-op on the result (the LUT join drops unprobed lists) that
     # makes a centroid_id-partitioned index (operators/ann_index.py) read
     # only nprobe/k_coarse of its parquet partitions.
-    index = index.filter(F.col("centroid_id").isin(sorted(set(out_c))))
+    index = index.filter(F.col("centroid_id").isin(np.unique(probes).tolist()))
     scored = index.join(F.broadcast(luts), "centroid_id").withColumn(
         "approx_dist", _adc_dist(m, n_cids)
     )

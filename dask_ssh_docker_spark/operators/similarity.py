@@ -1,33 +1,31 @@
 """Similarity search over embedding columns (SURVEY.md §2.H).
 
-Two paths, same contract:
+Top-k and near-dup pairs, each with an exact and a scale path:
 
 - **brute_force_topk** — exact: broadcast the (small) query set, score every
   corpus row map-side with JVM ``zip_with``/``aggregate`` vector math, keep
-  top-k per query with a ranking window.  Cost O(|corpus|·|Q|·dim) compute,
-  shuffle of |corpus|·|Q| scored rows.  The oracle baseline.
-- **brute_force_topk_arrow** — exact, vectorized: numpy/BLAS matmul per
-  Arrow batch + per-partition partial top-k, shuffling only
-  |partitions|·|Q|·k rows.  The high-dim / large-|Q| exact path.
-- **lsh_topk** — approximate scale path: random-hyperplane (sign) LSH.
-  T tables × b hyperplane bits per vector (planes are seeded,
-  deterministic, shipped as literal arrays — no fitting step); candidates
-  share a bucket in ≥1 table, then exact re-rank on candidates only.
-  Shuffle is |rows|·T bucket tuples; tune (b, T) for the
-  recall/cost point.  At 100 TB the bucket join replaces the all-pairs
-  explosion; skewed buckets split by AQE.
-
-``embedding_neardup_pairs`` is the all-pairs exact variant (validation
-scale); ``lsh_neardup_pairs`` the bucketed variant (scale path).
+  top-k per query with a salted ranking window.  Cost O(|corpus|·|Q|·dim)
+  compute, shuffle of |corpus|·|Q| scored rows.  The oracle baseline.
+- **lsh_topk** — approximate scale path: random-hyperplane (sign) LSH,
+  T tables × b seeded hyperplane bits held by one :class:`LSHModel` (no
+  fitting step); candidates share a bucket in ≥1 table, then exact
+  re-rank on candidates only (``lsh_probe``, also the persisted-index
+  probe).  Shuffle is |rows|·T bucket tuples; tune (b, T) for the
+  recall/cost point.  Skewed buckets split by AQE.
+- **embedding_neardup_pairs** — exact all-pairs near-dup (validation
+  scale); **lsh_neardup_pairs** — its bucketed twin (scale path).
+- **mmr_rerank** — diversity-aware re-rank of an exact top-``pool``.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, l2_norm
+from ..functions.vector import cosine_similarity, dot, l2_norm
 
 
 def brute_force_topk(
@@ -43,7 +41,7 @@ def brute_force_topk(
     ``queries`` must be small (it is broadcast); rename its id/vector
     columns to ``query_id``/``q_vec`` before the cross-score.
 
-    Ranking runs through ``salted_topk`` (r11): the classic single
+    Ranking runs through ``salted_topk``: the classic single
     ``Window.partitionBy(query_id)`` routes the ENTIRE scored corpus for
     one query through one task's sort — the unsplittable-window
     straggler (AQE cannot split window partitions), and for brute force
@@ -68,84 +66,55 @@ def brute_force_topk(
     ).select(query_id, corpus_id, F.round("sim", 6).alias("sim"), "rank")
 
 
-def brute_force_topk_arrow(
-    query_rows: list[tuple[int, list[float]]],
-    corpus: DataFrame,
-    k: int = 10,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized exact top-k — the scale variant of
-    ``brute_force_topk``: per Arrow batch, one numpy/BLAS matmul scores
-    the whole batch against all queries, ``argpartition`` keeps a k-row
-    partial per query, and only |partitions|·|Q|·k partial rows reach the
-    final ranking shuffle (vs |corpus|·|Q| scored rows on the JVM path).
-
-    ``query_rows`` is driver-side data ``[(id, vector), ...]`` — bounded
-    by contract (same as the LSH hyperplane literals), so plan
-    construction stays job-free and nothing is collected inside the
-    operator.  Results match ``brute_force_topk`` exactly up to float
-    tie-breaks (pinned in tests/test_similarity.py)."""
-    import pandas as pd
-
-    qids = np.array([q[0] for q in query_rows], dtype=np.int64)
-    qmat = np.array([q[1] for q in query_rows], dtype=np.float64)
-    qn = qmat / np.maximum(
-        np.linalg.norm(qmat, axis=1, keepdims=True), 1e-300
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-300)
-            sims = xn @ qn.T  # (batch, q)
-            kk = min(k, len(pdf))
-            part = np.argpartition(-sims, kk - 1, axis=0)[:kk]
-            ids = pdf[corpus_id].to_numpy()
-            frames = [
-                pd.DataFrame(
-                    {
-                        query_id: qids[j],
-                        corpus_id: ids[part[:, j]],
-                        "sim": sims[part[:, j], j],
-                    }
-                )
-                for j in range(len(qids))
-            ]
-            yield pd.concat(frames, ignore_index=True)
-
-    partials = corpus.select(corpus_id, vec_col).mapInPandas(
-        score, schema=f"{query_id} long, {corpus_id} long, sim double"
-    )
+def _cosine_topk(cands: DataFrame, query_id: str, corpus_id: str, k: int) -> DataFrame:
+    """(query_id, corpus_id, sim, rank): the exact re-rank of a bounded
+    candidate frame carrying ``__qvec``/``__cvec`` — cosine scored, ranked
+    per query by (sim desc, corpus id asc), sim rounded to 6 places.
+    The LSH and IVF top-k paths both end here; their groups are already
+    shortlist-sized, so one plain ranking window suffices."""
     w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
     return (
-        partials.withColumn("rank", F.row_number().over(w))
+        cands.withColumn("sim", cosine_similarity("__qvec", "__cvec"))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(query_id, corpus_id, F.round("sim", 6).alias("sim"), "rank")
     )
 
 
-def _hyperplanes(dim: int, bits: int, tables: int, seed: int) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((tables, bits, dim))
+@dataclass(frozen=True)
+class LSHModel:
+    """Random-hyperplane LSH state: ``tables × bits`` seeded hyperplanes
+    over ``dim``-long vectors.
+
+    ``dim`` has no default: the planes are drawn driver-side from it, and
+    inferring it from data would launch an eager ``first()`` job at
+    plan-construction time (and could not handle an empty frame at all).
+    Query construction stays job-free — ``tests/test_similarity.py``
+    asserts zero jobs run while building an LSH plan."""
+
+    dim: int
+    bits: int = 8
+    tables: int = 8
+    seed: int = 42
+
+    def planes(self) -> np.ndarray:
+        """(tables, bits, dim) hyperplanes, a pure function of the model."""
+        rng = np.random.default_rng(self.seed)
+        return rng.standard_normal((self.tables, self.bits, self.dim))
 
 
 def _bucket_udf(planes: np.ndarray):
     """Vectorized bucket ids: ONE BLAS matmul per Arrow batch against all
     ``tables × bits`` hyperplanes, sign bits packed per table.
 
-    This replaced a ``tables × bits`` forest of ``aggregate``/``zip_with``
-    fold expressions: higher-order functions are never whole-stage-
-    codegen'd, so the forest evaluated ~dim element steps per plane
-    INTERPRETED — and, plan-shape-dependent, sometimes re-evaluated —
-    measured bimodal 4-34 s at sf0.1 for what is one (n, dim)·(dim, 192)
-    matmul.  Sign convention matches the expression form (``d ≥ 0`` sets
-    the bit), so buckets are unchanged wherever the fold's sequential sum
-    and numpy's pairwise sum agree in sign — everywhere except |dot|
-    within float error of zero."""
+    Not a ``tables × bits`` forest of ``aggregate``/``zip_with`` fold
+    expressions: higher-order functions are never whole-stage-codegen'd,
+    so that forest evaluates ~dim element steps per plane INTERPRETED —
+    and, plan-shape-dependent, sometimes re-evaluated — measured bimodal
+    4-34 s at sf0.1 for what is one (n, dim)·(dim, 192) matmul.  A bit is
+    set when ``d ≥ 0``; the fold form's sequential sum and numpy's
+    pairwise sum agree in sign everywhere except |dot| within float
+    error of zero."""
     tables_, bits_, dim_ = planes.shape
     flat = planes.reshape(tables_ * bits_, dim_).T  # (dim, tables*bits)
     weights = (1 << np.arange(bits_)).astype(np.int64)
@@ -168,30 +137,10 @@ def _bucket_udf(planes: np.ndarray):
 
 
 def lsh_bucketed(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    bits: int = 8,
-    tables: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
+    df: DataFrame, id_col: str, vec_col: str, model: LSHModel
 ) -> DataFrame:
-    """(id, vec, table_idx, bucket) — one row per table per input row.
-
-    ``dim`` is REQUIRED: the hyperplanes are generated driver-side from
-    it, and inferring it from data would launch an eager ``first()`` job
-    at plan-construction time (and could not handle an empty frame at
-    all).  Query construction must stay job-free —
-    ``tests/test_similarity.py`` asserts zero jobs run while building
-    this plan."""
-    if dim is None:
-        raise ValueError(
-            f"lsh_bucketed requires dim= (the length of the {vec_col!r} "
-            "arrays): inferring it from data would run an eager job at "
-            "plan-construction time and fails on an empty frame"
-        )
-    planes = _hyperplanes(dim, bits, tables, seed)
-    bucket_arr = _bucket_udf(planes)(F.col(vec_col))
+    """(id, vec, table_idx, bucket) — one row per table per input row."""
+    bucket_arr = _bucket_udf(model.planes())(F.col(vec_col))
     # the UDF column materializes in its own ArrowEvalPython node, so the
     # posexplode consumes a computed attribute — no per-output-row
     # re-evaluation of the bucket computation
@@ -202,54 +151,33 @@ def lsh_bucketed(
     )
 
 
-def lsh_topk(
+def lsh_probe(
     queries: DataFrame,
+    buckets: DataFrame,
     corpus: DataFrame,
+    model: LSHModel,
     k: int = 10,
     query_id: str = "query_id",
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    bits: int = 8,
-    tables: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
 ) -> DataFrame:
-    """Approximate top-k: join query and corpus rows sharing any LSH
-    bucket, exact-score only those candidates, rank per query.
+    """Top-k of ``queries`` against a corpus bucket table ``buckets``
+    (``corpus_id``, ``table_idx``, ``bucket``) built under ``model``.
 
-    ``dim`` is REQUIRED (see ``lsh_bucketed`` — no plan-time jobs)."""
-    if dim is None:
-        raise ValueError(
-            f"lsh_topk requires dim= (the length of the {vec_col!r} "
-            "arrays); plan construction must not run jobs"
-        )
-    # Late materialization (r9 per-site audit — same shape that fixed
-    # lsh_neardup_pairs in r6, 272 s → 4.5 s at sf1): the bucket join and
-    # the candidate dedup move NO vector bodies — ``lsh_bucketed``'s
-    # ``tables×`` explode would otherwise multiply every 64-float payload
-    # T times through the join and the dedup exchange (and the Python-UDF
-    # node upstream hides size stats, so that byte-heavy exchange can't
-    # even be planned well).  Only (query_id, corpus_id) tuples shuffle;
-    # vectors re-attach ONCE per side afterwards, keyed by id.  This
-    # replaces the r8 width-pin question entirely: the bare-id exchange
-    # is tiny under every posture, and the join-back exchanges carry each
-    # vector once instead of T times — the property that survives 100×.
-    qb = lsh_bucketed(queries, query_id, vec_col, bits, tables, seed, dim=dim).select(
+    Only (query_id, corpus_id) tuples pass the bucket join and the pair
+    dedup; vectors re-attach once per side afterwards, keyed by id.
+    Carrying them through would multiply every payload ×tables behind a
+    Python-UDF node that hides size stats (the same shape cost
+    ``lsh_neardup_pairs`` 272 s vs 4.5 s at sf1).  Rows with equal ids
+    carry equal vectors, so the id-pair dedup equals ``distinct()``; the
+    re-attach sides dedup on id too, so duplicate input ids never let one
+    corpus_id fill several top-k slots.  Each dedup reuses its join's
+    hash partitioning, so it costs no extra shuffle."""
+    qb = lsh_bucketed(queries, query_id, vec_col, model).select(
         query_id, "table_idx", "bucket"
     )
-    cb = lsh_bucketed(corpus, corpus_id, vec_col, bits, tables, seed, dim=dim).select(
-        corpus_id, "table_idx", "bucket"
-    )
-    # id-keyed dedup: rows with equal ids are identical (same vectors),
-    # so deduping on the id pair alone is equivalent to distinct() over
-    # the full candidate row.  The re-attach sides are deduped on id too
-    # (ADVICE r9): if an input carries duplicate ids, the joins back
-    # would otherwise multiply each candidate pair by the id's input
-    # multiplicity and let one corpus_id occupy several top-k slots.
-    # The dedup shares the join's hash partitioning on the id (one
-    # exchange, reused), so it costs no extra shuffle.
     cands = (
-        qb.join(cb, ["table_idx", "bucket"])
+        qb.join(buckets, ["table_idx", "bucket"])
         .select(query_id, corpus_id)
         .dropDuplicates([query_id, corpus_id])
         .join(
@@ -263,13 +191,50 @@ def lsh_topk(
             corpus_id,
         )
     )
-    sim = cosine_similarity("__qvec", "__cvec")
-    w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
+    return _cosine_topk(cands, query_id, corpus_id, k)
+
+
+def lsh_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    model: LSHModel,
+    k: int = 10,
+    query_id: str = "query_id",
+    corpus_id: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Approximate top-k: bucket the corpus under ``model`` and
+    ``lsh_probe`` it — exact-score only query/corpus pairs sharing a
+    bucket in some table, rank per query."""
+    cb = lsh_bucketed(corpus, corpus_id, vec_col, model).select(
+        corpus_id, "table_idx", "bucket"
+    )
+    return lsh_probe(queries, cb, corpus, model, k, query_id, corpus_id, vec_col)
+
+
+def _normed(df: DataFrame, id_col: str, vec_col: str, side: str) -> DataFrame:
+    """(id_<side>, __v<side>, __n<side>): one side of a pair score, with
+    its vector's norm computed ONCE in the projection instead of
+    re-folded for every pair (cosine re-derives |a| and |b| per pair
+    otherwise — 2/3 of the interpreted work at n² pairs)."""
+    return df.select(
+        F.col(id_col).alias(f"id_{side}"),
+        F.col(vec_col).alias(f"__v{side}"),
+        l2_norm(vec_col).alias(f"__n{side}"),
+    )
+
+
+def _pairs_over(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, sim) for the ``_normed`` a×b rows with cosine ≥
+    ``threshold``.  The dot stays the in-order JVM fold, so the doubles
+    match the DuckDB oracle's."""
+    sim = dot("__va", "__vb") / F.nullif(
+        F.col("__na") * F.col("__nb"), F.lit(0.0)
+    )
     return (
-        cands.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, F.round("sim", 6).alias("sim"), "rank")
+        pairs.withColumn("sim", sim)
+        .filter(F.col("sim") >= threshold)
+        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
     )
 
 
@@ -282,41 +247,18 @@ def embedding_neardup_pairs(
     """Exact all-pairs cosine near-dup (id_a < id_b, sim ≥ threshold).
     O(n²) — validation scale; use ``lsh_neardup_pairs`` beyond that.
 
-    Two cost controls that change NO math (the dot stays the same
-    in-order JVM fold, so oracle doubles are untouched):
-
-    - per-vector norms are computed ONCE in each side's projection
-      instead of re-folding both arrays per pair (cosine re-derives
-      |a| and |b| for every pair otherwise — 2/3 of the interpreted
-      work at n² pairs);
-    - the stream side is widened to the cluster before the nested-loop
-      join: the corpus arrives as 1-2 parquet splits at validation
-      scale, which otherwise serializes the ENTIRE n² scan onto one
-      task (measured: single thread pegged 53 min at sf1)."""
-    from ..functions.vector import dot, l2_norm
-
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__va"),
-        l2_norm(vec_col).alias("__na"),
-    )
+    Per-vector norms are hoisted into each side's projection
+    (``_normed``), and the stream side is widened to the cluster before
+    the nested-loop join: the corpus arrives as 1-2 parquet splits at
+    validation scale, which otherwise serializes the ENTIRE n² scan onto
+    one task (measured: single thread pegged 53 min at sf1)."""
+    a = _normed(df, id_col, vec_col, "a")
     width = df.sparkSession.sparkContext.defaultParallelism
     if a.rdd.getNumPartitions() < width:  # gated: no-op on wide scans
         a = a.repartition(width, "id_a")
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__vb"),
-        l2_norm(vec_col).alias("__nb"),
-    )
-    sim = dot("__va", "__vb") / F.nullif(
-        F.col("__na") * F.col("__nb"), F.lit(0.0)
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
+    b = _normed(df, id_col, vec_col, "b")
+    return _pairs_over(
+        a.crossJoin(b).filter(F.col("id_a") < F.col("id_b")), threshold
     )
 
 
@@ -327,21 +269,22 @@ def neardup_bits_for(
 
     At FIXED bits the candidate volume of the bucket self-join is
     ~n²·T/2^bits — quadratic in the corpus.  Measured consequence
-    (BENCH_NOTES r10 §10): at sf10 (200k isotropic vectors) the default
+    (BENCH_NOTES, "The sf10 correctness sweep"): at sf10 (200k isotropic
+    vectors) the default
     8 bits put ~780 rows in every one of 2048 bucket cells → ~0.6B
     candidate id-pairs through the join + distinct, which spilled a
     local executor to disk-full.  Holding the expected bucket occupancy
     constant instead (``bits = log2(n / target_bucket_rows)``) makes
     candidates ~n·target·T/2 — LINEAR in n: the knob must scale with
     log2(corpus), exactly like PQ's shortlist scales with corpus
-    (tests/test_pq.py lesson, r5).  The floor keeps small/validation
-    corpora on the historical bucketization (≤ ~16k rows → 8 bits →
-    byte-identical outputs to every prior round's record).
+    (tests/test_pq.py).  The floor keeps small/validation corpora
+    (≤ ~16k rows) on 8 bits, the bucketization every recorded
+    validation-scale output was produced with.
 
     More bits at fixed tables lowers per-pair recall (p_bucket =
     (1−θ/π)^bits per table) — pair with ``neardup_tables_for(bits)``,
     which raises the table count alongside so design-band recall stays
-    constant as the corpus grows (ADVICE r10).  The subset-of-exact
+    constant as the corpus grows.  The subset-of-exact
     guarantee is bits-independent (every candidate is exact-verified)."""
     import math
 
@@ -359,16 +302,16 @@ def neardup_tables_for(
     """Table count holding DESIGN-BAND recall constant as ``bits`` grows.
 
     ``neardup_bits_for`` keeps the bucket join linear in the corpus, but
-    bits alone at fixed tables collapses recall (ADVICE r10): the
+    bits alone at fixed tables collapses recall: the
     per-table bucket probability for a pair at similarity s is
     p = (1−θ/π)^bits with θ = arccos(s), and recall over T tables is
     1−(1−p)^T.  At the query's
     own 0.4 threshold, 8 tables give ~18% at 8 bits but ~3% at the 12
     bits chosen at sf10.  This helper sizes T so recall at the DESIGN
     similarity (0.9 — the band "near-duplicate" actually means) never
-    degrades: T = ⌈ln(1−R)/ln(1−p(0.9)^bits)⌉, floored at the
-    historical 8 so validation-scale runs (8 bits) are byte-identical
-    to every prior round's record (T(8)=8).
+    degrades: T = ⌈ln(1−R)/ln(1−p(0.9)^bits)⌉, floored at 8 so
+    validation-scale runs (8 bits) keep the 8 × 8 bucketization
+    (T(8)=8).
 
     Growth law: p(0.9) = 0.8564, so T ∝ (1/0.8564)^bits = 2^(0.224·bits)
     → with bits = log2(n/64), T ∝ (n/64)^0.224 and total candidate
@@ -393,58 +336,37 @@ def neardup_tables_for(
 
 def lsh_neardup_pairs(
     df: DataFrame,
+    model: LSHModel,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.4,
-    bits: int = 8,
-    tables: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs restricted to LSH-bucket cohabitants — the scale
-    path: |rows|·T bucket tuples shuffle instead of n² pairs.  Pass
-    ``dim`` to keep plan construction job-free (see ``lsh_bucketed``)
-    and size ``bits`` with ``neardup_bits_for(corpus_rows)`` — the
-    default 8 is the ≤16k-row validation bucketization and goes
-    quadratic-candidate at larger corpora (see that helper's docstring
-    for the measured sf10 failure)."""
-    from ..functions.vector import dot, l2_norm
-
-    bkt = lsh_bucketed(df, id_col, vec_col, bits, tables, seed, dim=dim)
+    path: |rows|·T bucket tuples shuffle instead of n² pairs.  Size
+    ``model.bits`` with ``neardup_bits_for(corpus_rows)`` and
+    ``model.tables`` with ``neardup_tables_for(bits)`` — 8 bits is the
+    ≤16k-row validation bucketization and goes quadratic-candidate at
+    larger corpora (see that helper's docstring for the measured sf10
+    failure)."""
+    bkt = lsh_bucketed(df, id_col, vec_col, model)
     a = bkt.select(F.col(id_col).alias("id_a"), "table_idx", "bucket")
     b = bkt.select(F.col(id_col).alias("id_b"), "table_idx", "bucket")
     # candidate DEDUP moves vector bodies NOWHERE: only (id_a, id_b)
     # tuples pass through the bucket join and the distinct — carrying
-    # both 64-float payloads through the dedup exchange made the "scale
-    # path" slower than the all-pairs baseline (272 s vs 100 s at sf1;
-    # this shape: 4.5 s).  Vectors re-attach once per side afterwards,
-    # with per-vector norms hoisted into the projection (same in-order
-    # JVM fold — oracle doubles untouched).
+    # both 64-float payloads through the dedup exchange makes the scale
+    # path slower than the all-pairs baseline (272 s vs 100 s at sf1;
+    # this shape: 4.5 s).  Vectors re-attach once per side afterwards.
     cands = (
         a.join(b, ["table_idx", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    va = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__va"),
-        l2_norm(vec_col).alias("__na"),
-    )
-    vb = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__vb"),
-        l2_norm(vec_col).alias("__nb"),
-    )
-    sim = dot("__va", "__vb") / F.nullif(
-        F.col("__na") * F.col("__nb"), F.lit(0.0)
-    )
-    return (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
+    return _pairs_over(
+        cands.join(_normed(df, id_col, vec_col, "a"), "id_a").join(
+            _normed(df, id_col, vec_col, "b"), "id_b"
+        ),
+        threshold,
     )
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import (
+    LSHModel,
     brute_force_topk,
     embedding_neardup_pairs,
     lsh_neardup_pairs,
@@ -105,11 +106,11 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
-    # dim passed explicitly (testdata embeddings are 64-d, TESTDATA.md):
-    # plan construction stays job-free — no first() inference round-trip.
-    return lsh_topk(queries, corpus, k=10, bits=6, tables=32, dim=64).orderBy(
-        "query_id", "rank"
-    )
+    # dim is given (testdata embeddings are 64-d, TESTDATA.md): plan
+    # construction stays job-free — no first() inference round-trip.
+    return lsh_topk(
+        queries, corpus, LSHModel(dim=64, bits=6, tables=32), k=10
+    ).orderBy("query_id", "rank")
 
 
 @query("sim_neardup_lsh", oracle=None)
@@ -119,10 +120,10 @@ def sim_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bits`` scales with log2(corpus) via ``neardup_bits_for`` — fixed
     bits make the bucket join's candidate volume quadratic in the
     corpus (measured executor spill-to-disk-full at sf10, BENCH_NOTES
-    r10 §10) — and ``tables`` scales alongside via
+    "The sf10 correctness sweep") — and ``tables`` scales alongside via
     ``neardup_tables_for`` so design-band recall (sim ≥ 0.9) holds
     ~0.93 at every scale instead of collapsing with the extra bits
-    (ADVICE r10; borderline 0.4-band recall still degrades with scale,
+    (borderline 0.4-band recall still degrades with scale,
     by a documented formula, measured in
     tests/test_similarity.py::test_neardup_recall_at_scale — callers
     needing exhaustive 0.4 pairs use the exact validation-capped twin).
@@ -130,8 +131,8 @@ def sim_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata, no Spark job — plan construction stays job-free per
     tests/test_similarity.py); at 100 TB the caller passes catalog
     stats the same way.  The ≥8-bit / 8-table floors keep every
-    validation-scale corpus (≤16k rows) on the historical
-    bucketization, so driver-gate outputs are unchanged."""
+    validation-scale corpus (≤16k rows) on the 8 × 8 bucketization
+    the driver-gate outputs were recorded with."""
     from ..operators.similarity import neardup_bits_for, neardup_tables_for
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -142,9 +143,8 @@ def sim_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:
         n = emb.count()  # non-local path: one metadata-cheap job
     bits = neardup_bits_for(n)
-    return lsh_neardup_pairs(
-        emb, threshold=0.4, bits=bits, tables=neardup_tables_for(bits), dim=64
-    ).orderBy("id_a", "id_b")
+    model = LSHModel(dim=64, bits=bits, tables=neardup_tables_for(bits))
+    return lsh_neardup_pairs(emb, model, threshold=0.4).orderBy("id_a", "id_b")
 
 
 @query("sim_topk_ivf", oracle=None)
@@ -176,10 +176,10 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     200 candidates/query) + exact re-rank — the memory-bound ANN scale
     path beside LSH (hash buckets) and IVF (scan fraction).  Recall@10
     vs ``sim_topk_bruteforce``: 0.96 measured at sf0.1, floor ≥ 0.8
-    pinned in tests/test_pq.py (the r5-era expand=5 shortlist was a
-    FIXED 50 candidates, so recall sank as the corpus grew — 0.58 at
-    sf0.1; shortlist size is the knob that must scale with corpus, and
-    200 exact re-ranks per query is still negligible at any scale).
+    pinned in tests/test_pq.py (an expand=5 shortlist is a FIXED 50
+    candidates, so recall sinks as the corpus grows — 0.58 at sf0.1;
+    shortlist size is the knob that must scale with corpus, and 200
+    exact re-ranks per query is still negligible at any scale).
     At 100 TB the raw vectors are touched only for the |Q|·200 re-rank
     candidates."""
     from ..operators.pq import pq_encode, pq_topk_rerank, train_pq_codebooks
@@ -209,13 +209,12 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe=12/16 (same rationale as sim_topk_ivf); recall@10 ≥ 0.8 vs
     brute force pinned at sf0.1 in tests/test_ivfpq.py.
 
-    ``k_coarse`` scales as √corpus via ``coarse_k_for`` (VERDICT r10
-    item 6): at fixed k the ADC pass scans nprobe·n/k codes — LINEAR in
-    the corpus; at k=√n it is nprobe·√n, sub-linear, with the fit cost
-    paid once per corpus and amortized over every query batch
-    (fit/probe split measured in BENCH_NOTES r11).  The ≤16k floor
-    keeps validation corpora on the historical k=16 (recall pins
-    unchanged)."""
+    ``k_coarse`` scales as √corpus via ``coarse_k_for``: at fixed k the
+    ADC pass scans nprobe·n/k codes — LINEAR in the corpus; at k=√n it
+    is nprobe·√n, sub-linear, with the fit cost paid once per corpus and
+    amortized over every query batch (fit/probe split measured in
+    BENCH_NOTES).  The ≤16k floor keeps validation corpora on k=16, the
+    configuration the recall pins hold at."""
     from ..operators.ivfpq import coarse_k_for, encode_ivfpq, ivfpq_topk, train_ivfpq
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -241,19 +240,20 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-# --- MMR oracle (promoted rows-only → hash, r13) --------------------------
+# --- MMR oracle -------------------------------------------------------------
 #
 # MMR is deterministic given the candidate pool: relevance is the
 # 6-dp-ROUNDED brute-force cosine (so the greedy objective's lam·rel term
 # is bit-reproducible cross-engine), candidate selection and the greedy
 # argmax both tie-break on (score desc, id asc), and k=5 rounds unroll
 # into 5 CTE stages (the same bounded-unroll pattern as the
-# canonical-survivors CC oracle, BENCH_NOTES r12 §4 — selset_r is
-# MATERIALIZED so round r+1 does not re-inline rounds 1..r).  The only
-# cross-engine float exposure is the candidate-candidate cosine (numpy
-# normalizes rows then matmuls; the oracle divides the sequential-fold
-# dot by the norm product) — ~1-ulp noise under a 6-dp round, the same
-# tolerance the hash-matched sim_topk_bruteforce oracle already carries.
+# canonical-survivors CC oracle, BENCH_NOTES "DuckDB CTE inlining" —
+# selset_r is MATERIALIZED so round r+1 does not re-inline rounds
+# 1..r).  The only cross-engine float exposure is the candidate-candidate
+# cosine (numpy normalizes rows then matmuls; the oracle divides the
+# sequential-fold dot by the norm product) — ~1-ulp noise under a 6-dp
+# round, the same tolerance the hash-matched sim_topk_bruteforce oracle
+# already carries.
 
 _MMR_K, _MMR_POOL, _MMR_LAM = 5, 20, 0.7
 
@@ -333,9 +333,9 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline.  Greedy selection runs as one ``applyInPandas`` per
     pool-row group (parallel across queries, O(k·pool·dim) numpy per
     group); parity with a pure-Python reference implementation and the
-    rank-1 = top-relevance invariant are pinned in tests/test_wave5.py.
-    Promoted to hash-checked in r13 via the unrolled-greedy DuckDB
-    oracle (_mmr_oracle_sql)."""
+    rank-1 = top-relevance invariant are pinned in tests/test_wave5.py;
+    the output is hash-checked against the unrolled-greedy DuckDB oracle
+    (_mmr_oracle_sql)."""
     from ..operators.similarity import mmr_rerank
 
     emb = load_table(spark, sf_dir, "embeddings")

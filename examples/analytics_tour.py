@@ -30,7 +30,7 @@ def main(argv: list[str]) -> int:
         reaggregate,
         rollup_hourly,
     )
-    from dask_ssh_docker_spark.operators.similarity import lsh_topk
+    from dask_ssh_docker_spark.operators.similarity import LSHModel, lsh_topk
     from dask_ssh_docker_spark.sources import load_table
 
     ev = load_table(spark, sf_dir, "events")
@@ -62,7 +62,9 @@ def main(argv: list[str]) -> int:
     }
     lsh_hits = {
         (r.query_id, r.vec_id)
-        for r in lsh_topk(queries, corpus, k=10, bits=6, tables=16, dim=64).collect()
+        for r in lsh_topk(
+            queries, corpus, LSHModel(dim=64, bits=6, tables=16), k=10
+        ).collect()
     }
     overlap = len(ivf_hits & lsh_hits)
 

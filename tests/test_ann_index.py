@@ -103,21 +103,19 @@ def test_lsh_index_roundtrip_equals_in_session(spark, emb, tmp_path):
         lsh_probe_topk,
         save_lsh_index,
     )
-    from dask_ssh_docker_spark.operators.similarity import lsh_topk
+    from dask_ssh_docker_spark.operators.similarity import LSHModel, lsh_topk
 
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
-    in_session = lsh_topk(queries, corpus, k=10, bits=6, tables=32, dim=64)
+    model = LSHModel(dim=64, bits=6, tables=32, seed=42)
+    in_session = lsh_topk(queries, corpus, model, k=10)
 
     path = str(tmp_path / "lsh_idx")
-    save_lsh_index(
-        path, corpus, id_col="vec_id", vec_col="embedding",
-        bits=6, tables=32, seed=42, dim=64,
-    )
+    save_lsh_index(path, corpus, model, id_col="vec_id", vec_col="embedding")
     idx = load_lsh_index(spark, path)
-    assert (idx.bits, idx.tables, idx.seed, idx.dim) == (6, 32, 42, 64)
+    assert idx.model == model
     # buckets persisted without vector payloads, partitioned by table
     assert set(idx.buckets.columns) == {"vec_id", "bucket", "table_idx"}
     loaded = lsh_probe_topk(queries, idx, corpus, k=10)
@@ -133,10 +131,11 @@ def test_wrong_kind_and_version_fail_fast(spark, emb, tmp_path):
         load_lsh_index,
         save_lsh_index,
     )
+    from dask_ssh_docker_spark.operators.similarity import LSHModel
 
     corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
     path = str(tmp_path / "lsh_kind")
-    save_lsh_index(path, corpus, dim=64, bits=4, tables=4)
+    save_lsh_index(path, corpus, LSHModel(dim=64, bits=4, tables=4))
     with pytest.raises(ValueError, match="kind"):
         load_ivfpq_index(spark, path)
     # stamp a future version and expect a fast, explicit failure
@@ -219,3 +218,32 @@ def test_load_probe_job_count(spark, sf_dir, spark_work, tmp_path):
     # parallelism; the count was measured at 8 (any local[N≤8] session)
     if spark.sparkContext.defaultParallelism == 8:
         assert w.tasks == 51
+
+
+def test_lsh_load_probe_job_count(spark, sf_dir, spark_work, tmp_path):
+    """load_lsh_index → lsh_probe_topk at sf0.001: 11 jobs / 23 tasks.
+    Loading reads the meta once; the probe regenerates the hyperplanes
+    from the model and reads the persisted buckets."""
+    from dask_ssh_docker_spark.operators.ann_index import (
+        load_lsh_index,
+        lsh_probe_topk,
+        save_lsh_index,
+    )
+    from dask_ssh_docker_spark.operators.similarity import LSHModel
+    from dask_ssh_docker_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
+    path = str(tmp_path / "lsh_jobs")
+    save_lsh_index(path, corpus, LSHModel(dim=64, bits=6, tables=32))
+    with spark_work() as w:
+        idx = load_lsh_index(spark, path)
+        lsh_probe_topk(queries, idx, corpus, k=10).collect()
+    assert w.jobs == 11
+    # tasks of parquet-footer and shuffle stages scale with the default
+    # parallelism; the count was measured at 8 (any local[N≤8] session)
+    if spark.sparkContext.defaultParallelism == 8:
+        assert w.tasks == 23

@@ -67,14 +67,14 @@ def test_asof_nearest_date_type(spark):
 
 
 def test_lsh_empty_frame_clear_error(spark):
-    from dask_ssh_docker_spark.operators.similarity import lsh_bucketed
+    from dask_ssh_docker_spark.operators.similarity import LSHModel, lsh_bucketed
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    # dim is required — omitting it raises immediately (no inference job)
-    with pytest.raises(ValueError, match="dim"):
-        lsh_bucketed(empty, "vec_id", "embedding")
+    # dim is required — a model without it fails at once (no inference job)
+    with pytest.raises(TypeError, match="dim"):
+        LSHModel()
     # with explicit dim an empty frame is fine
-    assert lsh_bucketed(empty, "vec_id", "embedding", dim=4).count() == 0
+    assert lsh_bucketed(empty, "vec_id", "embedding", LSHModel(dim=4)).count() == 0
 
 
 def test_foreach_batch_epoch_retry_idempotent(spark, tmp_path):

@@ -33,7 +33,11 @@ def test_cosine_literals(spark):
 
 
 def test_lsh_topk_recall_vs_bruteforce(spark):
-    from dask_ssh_docker_spark.operators.similarity import brute_force_topk, lsh_topk
+    from dask_ssh_docker_spark.operators.similarity import (
+        LSHModel,
+        brute_force_topk,
+        lsh_topk,
+    )
     from dask_ssh_docker_spark.sources import load_table
 
     emb = load_table(spark, SF, "embeddings")
@@ -49,7 +53,9 @@ def test_lsh_topk_recall_vs_bruteforce(spark):
     # random noise - the hardest case for hyperplane LSH
     approx = {
         (r.query_id, r.vec_id)
-        for r in lsh_topk(queries, corpus, k=10, bits=6, tables=16, dim=64).collect()
+        for r in lsh_topk(
+            queries, corpus, LSHModel(dim=64, bits=6, tables=16), k=10
+        ).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, f"LSH recall@10 = {recall}"
@@ -57,6 +63,7 @@ def test_lsh_topk_recall_vs_bruteforce(spark):
 
 def test_lsh_neardup_subset_of_exact(spark):
     from dask_ssh_docker_spark.operators.similarity import (
+        LSHModel,
         embedding_neardup_pairs,
         lsh_neardup_pairs,
     )
@@ -68,7 +75,7 @@ def test_lsh_neardup_subset_of_exact(spark):
     }
     approx = {
         (r.id_a, r.id_b)
-        for r in lsh_neardup_pairs(emb, threshold=0.4, dim=64).collect()
+        for r in lsh_neardup_pairs(emb, LSHModel(dim=64), threshold=0.4).collect()
     }
     assert approx <= exact  # candidates are exact-verified
     assert len(approx) > 0
@@ -208,12 +215,13 @@ def test_ivf_sample_too_small_raises(spark):
 
 
 def test_lsh_plan_construction_is_job_free(spark, spark_work):
-    """Building the LSH operators with dim= passed (as the registered
-    queries now do) must launch NO Spark job — the first() dim-inference
-    round-trip is gone from the shipped path and plan construction stays
-    lazy.  (Table loading itself is excluded: spark.read.parquet runs an
-    intrinsic schema-inference job that exists for every query.)"""
+    """Building the LSH operators from an ``LSHModel`` (which carries
+    ``dim``) must launch NO Spark job — there is no first() dim-inference
+    round-trip and plan construction stays lazy.  (Table loading itself
+    is excluded: spark.read.parquet runs an intrinsic schema-inference
+    job that exists for every query.)"""
     from dask_ssh_docker_spark.operators.similarity import (
+        LSHModel,
         lsh_neardup_pairs,
         lsh_topk,
     )
@@ -226,45 +234,24 @@ def test_lsh_plan_construction_is_job_free(spark, spark_work):
     corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
 
     with spark_work() as w:
-        lsh_topk(queries, corpus, k=10, bits=6, tables=32, dim=64)
-        lsh_neardup_pairs(emb, threshold=0.4, dim=64)
+        lsh_topk(queries, corpus, LSHModel(dim=64, bits=6, tables=32), k=10)
+        lsh_neardup_pairs(emb, LSHModel(dim=64), threshold=0.4)
     assert w.jobs == 0, f"LSH plan construction launched {w.jobs} jobs"
 
 
-def test_arrow_bruteforce_matches_jvm_bruteforce(spark):
-    """The numpy/BLAS partial-top-k path returns the same neighbors and
-    cosines as the JVM zip_with path (up to float tie-order)."""
-    from dask_ssh_docker_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_arrow,
-    )
-    from dask_ssh_docker_spark.sources import load_table
+def test_sim_topk_lsh_job_count(spark, sf_dir, spark_work):
+    """sim_topk_lsh built and collected at sf0.001: 10 jobs / 20 tasks.
+    The query and corpus buckets come from one model, and the probe
+    moves ids only, so no step runs an extra job."""
+    from dask_ssh_docker_spark.queries import REGISTRY
 
-    emb = load_table(spark, SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.filter(F.col("vec_id") >= 5).select("vec_id", "embedding")
-
-    jvm = brute_force_topk(queries, corpus, k=10).collect()
-    qrows = [(r["query_id"], r["embedding"]) for r in queries.collect()]
-    arr = brute_force_topk_arrow(qrows, corpus, k=10).collect()
-
-    def by_query(rows):
-        out = {}
-        for r in rows:
-            out.setdefault(r["query_id"], []).append((r["vec_id"], r["sim"]))
-        return {q: sorted(v) for q, v in out.items()}
-
-    j, a = by_query(jvm), by_query(arr)
-    assert set(j) == set(a)
-    for q in j:
-        jd, ad = dict(j[q]), dict(a[q])
-        # same neighbor sets (ties aside) ...
-        assert set(jd) == set(ad), (q, jd, ad)
-        # ... with matching cosines at the rounded precision
-        for vid in jd:
-            assert abs(jd[vid] - ad[vid]) <= 1e-6, (q, vid, jd[vid], ad[vid])
+    with spark_work() as w:
+        REGISTRY["sim_topk_lsh"].fn(spark, sf_dir).collect()
+    assert w.jobs == 10
+    # tasks of parquet-footer and shuffle stages scale with the default
+    # parallelism; the count was measured at 8 (any local[N≤8] session)
+    if spark.sparkContext.defaultParallelism == 8:
+        assert w.tasks == 20
 
 
 def test_lsh_topk_duplicate_input_ids_dont_multiply(spark):
@@ -272,7 +259,7 @@ def test_lsh_topk_duplicate_input_ids_dont_multiply(spark):
     candidate re-attach joins must not multiply pairs — one corpus_id may
     occupy at most one top-k slot per query, and the result must equal
     the dedup-input run exactly."""
-    from dask_ssh_docker_spark.operators.similarity import lsh_topk
+    from dask_ssh_docker_spark.operators.similarity import LSHModel, lsh_topk
     from dask_ssh_docker_spark.sources import load_table
 
     emb = load_table(spark, SF, "embeddings")
@@ -284,12 +271,14 @@ def test_lsh_topk_duplicate_input_ids_dont_multiply(spark):
     )
     dup_q = queries.unionAll(queries)          # every query id twice
     dup_c = corpus.unionAll(corpus.limit(50))  # 50 corpus ids twice
-    kw = dict(k=5, bits=6, tables=16, dim=64)
+    model = LSHModel(dim=64, bits=6, tables=16)
     clean = sorted(
-        (r.query_id, r.vec_id, r.rank) for r in lsh_topk(queries, corpus, **kw).collect()
+        (r.query_id, r.vec_id, r.rank)
+        for r in lsh_topk(queries, corpus, model, k=5).collect()
     )
     duped = sorted(
-        (r.query_id, r.vec_id, r.rank) for r in lsh_topk(dup_q, dup_c, **kw).collect()
+        (r.query_id, r.vec_id, r.rank)
+        for r in lsh_topk(dup_q, dup_c, model, k=5).collect()
     )
     assert duped == clean
     per_slot = {}
@@ -358,6 +347,7 @@ def test_neardup_recall_at_scale(spark):
     import pandas as pd
 
     from dask_ssh_docker_spark.operators.similarity import (
+        LSHModel,
         lsh_neardup_pairs,
         neardup_bits_for,
         neardup_tables_for,
@@ -390,7 +380,7 @@ def test_neardup_recall_at_scale(spark):
     got = {
         (r.id_a, r.id_b)
         for r in lsh_neardup_pairs(
-            df, threshold=0.4, bits=bits, tables=tables, dim=64
+            df, LSHModel(dim=64, bits=bits, tables=tables), threshold=0.4
         ).collect()
     }
     hit_design = sum((i, d0 + i) in got for i in range(n_pl)) / n_pl
