@@ -265,17 +265,18 @@ def stream_mv_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ts").alias("max_ts"),
         )
 
+    # the snapshot dir stays: the returned frame reads it
     snap_dir = tempfile.mkdtemp(prefix="spark_graft_mv_snap_")
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_mv_ckpt_")
-    q = incremental_agg_mv(
-        stream,
-        partial,
-        keys=["user_id"],
-        kinds={"n_events": "sum", "total_dec": "sum", "max_ts": "max"},
-        snapshot_dir=snap_dir,
-        checkpoint=ckpt,
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="spark_graft_mv_ckpt_") as ckpt:
+        q = incremental_agg_mv(
+            stream,
+            partial,
+            keys=["user_id"],
+            kinds={"n_events": "sum", "total_dec": "sum", "max_ts": "max"},
+            snapshot_dir=snap_dir,
+            checkpoint=ckpt,
+        )
+        q.awaitTermination()
     return read_mv(spark, snap_dir).select(
         "user_id",
         "n_events",

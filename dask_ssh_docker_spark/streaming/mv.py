@@ -12,7 +12,9 @@ Per micro-batch:
    combining mergeable metrics (sum/count → ``sum``, min → ``min``, max
    → ``max``);
 3. write the merged snapshot to a NEW version directory and atomically
-   swing the ``_LATEST`` pointer (``os.replace``).
+   swing the ``_LATEST`` pointer (``os.replace``).  The pointer also
+   records the snapshot schema, which every version shares, so
+   :func:`read_mv` reads any version without a schema-inference job.
 
 Exactly-once: the pointer records the epoch that produced it; a replayed
 epoch (crash between snapshot write and checkpoint commit) sees
@@ -30,11 +32,13 @@ batch arrival order can't change the result.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: each mergeable kind's combining aggregate (counts add up like sums)
 _MERGE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
@@ -56,13 +60,14 @@ def combine_snapshots(
     return old.unionByName(new).groupBy(*keys).agg(*aggs)
 
 
-def _read_pointer(snapshot_dir: str) -> tuple[int, str] | None:
+def _read_pointer(snapshot_dir: str) -> tuple[int, str, StructType] | None:
+    """The ``_LATEST`` pointer: ``epoch<TAB>vdir<TAB>schema json``."""
     p = os.path.join(snapshot_dir, "_LATEST")
     if not os.path.exists(p):
         return None
     with open(p) as f:
-        epoch, vdir = f.read().strip().split("\t")
-    return int(epoch), vdir
+        epoch, vdir, schema = f.read().strip().split("\t")
+    return int(epoch), vdir, StructType.fromJson(json.loads(schema))
 
 
 def read_mv(
@@ -71,18 +76,19 @@ def read_mv(
     """Load a snapshot: the current one (follows the ``_LATEST`` pointer)
     or, with ``version=``, a specific retained epoch — Delta-style time
     travel (``VERSION AS OF``); old version directories are retained, so
-    any committed epoch stays readable until the caller prunes them."""
+    any committed epoch stays readable until the caller prunes them.
+    Every version has the schema the pointer records."""
+    vdir = None
     if version is not None:
         vdir = os.path.join(snapshot_dir, f"v{version}")
         if not os.path.isdir(vdir):
             raise FileNotFoundError(
                 f"snapshot version {version} not found under {snapshot_dir}"
             )
-        return spark.read.parquet(vdir)
     ptr = _read_pointer(snapshot_dir)
     if ptr is None:
         raise FileNotFoundError(f"no committed snapshot under {snapshot_dir}")
-    return spark.read.parquet(ptr[1])
+    return spark.read.schema(ptr[2]).parquet(vdir or ptr[1])
 
 
 def incremental_agg_mv(
@@ -128,7 +134,7 @@ def incremental_agg_mv(
         part.write.mode("overwrite").parquet(vdir)
         tmp = os.path.join(snapshot_dir, "_LATEST.tmp")
         with open(tmp, "w") as f:
-            f.write(f"{epoch_id}\t{vdir}")
+            f.write(f"{epoch_id}\t{vdir}\t{schema.json()}")
         os.replace(tmp, os.path.join(snapshot_dir, "_LATEST"))
 
     return (

@@ -224,32 +224,47 @@ def test_runner_hosts_end_to_end(standalone_master, tmp_path):
     assert data["scatter_sum"] == sum(range(100))
 
 
-def test_cluster_posture_e2e_subset():
+def test_cluster_posture_e2e_subset(standalone_master, tmp_path, capsys):
     """VERDICT r9 item 5: the core queries must EXECUTE under the cluster
     posture (parallelismFirst=false, width>=400, static pins at session
     width) with plan shapes identical to the local posture's.  Runs the
-    posture-comparison tool on a 3-query subset (one scan-agg, one
-    window, the one pinned-exchange operator); the full 16-query record
-    is tools/cluster_posture_e2e.py's default run (BENCH_NOTES r10)."""
-    if _port_open(MASTER_PORT):
-        pytest.skip(f"port {MASTER_PORT} already in use")
-    proc = subprocess.run(
-        [sys.executable, f"{REPO}/tools/cluster_posture_e2e.py",
-         "/root/testdata/sf0.001"],
-        env={
-            **os.environ,
-            "PYTHONPATH": REPO,
-            "PYSPARK_PYTHON": sys.executable,
-            "CLUSTER_POSTURE_QUERIES":
-                "q1_pricing_summary,window_cumsum,setsim_prefix_pairs",
-        },
-        capture_output=True,
-        text=True,
-        timeout=400,
-    )
-    assert proc.returncode == 0, (proc.stdout[-3000:], proc.stderr[-2000:])
-    assert "all plans/rows match across postures" in proc.stdout
+    posture-comparison tool's two passes on a 3-query subset (one
+    scan-agg, one window, the one pinned-exchange operator): a local
+    session, then the runner on this module's standalone master; the
+    full 16-query record is tools/cluster_posture_e2e.py's default run
+    (BENCH_NOTES r10)."""
+    sys.path.insert(0, f"{REPO}/tools")
+    from cluster_posture_e2e import compare
+
+    tool = f"{REPO}/tools/cluster_posture_e2e.py"
+    local, cluster = str(tmp_path / "local.json"), str(tmp_path / "cluster.json")
+    env = {
+        **os.environ,
+        "PYTHONPATH": REPO,
+        "PYSPARK_PYTHON": sys.executable,
+        "CLUSTER_POSTURE_QUERIES":
+            "q1_pricing_summary,window_cumsum,setsim_prefix_pairs",
+    }
+    for cmd in (
+        [tool, "--phase", "run", "--out", local, "/root/testdata/sf0.001"],
+        ["-m", "dask_ssh_docker_spark.runner", "--master", standalone_master,
+         "--conf", "spark.ui.enabled=false", "--conf", "spark.cores.max=2",
+         tool, "--", "--out", cluster, "/root/testdata/sf0.001"],
+    ):
+        proc = subprocess.run(
+            [sys.executable, *cmd], env=env, capture_output=True, text=True,
+            timeout=400, cwd=str(tmp_path),
+        )
+        assert proc.returncode == 0, (proc.stdout[-3000:], proc.stderr[-2000:])
+    with open(cluster) as fh:
+        conf = json.load(fh)["conf"]
+    assert conf["master"] == standalone_master
+    # the local-only streaming checkpoint manager stays off the cluster
+    assert conf["checkpoint_manager"] is None
+    assert compare(local, cluster) == 0
+    out = capsys.readouterr().out
+    assert "all plans/rows match across postures" in out
     # the pin must widen to the cluster session width
-    pin_lines = [ln for ln in proc.stdout.splitlines()
+    pin_lines = [ln for ln in out.splitlines()
                  if "setsim_prefix_pairs" in ln and "pins" in ln]
     assert pin_lines and "cluster=[400]" in pin_lines[-1], pin_lines

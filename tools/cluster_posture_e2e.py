@@ -19,7 +19,7 @@ Usage:
   (internal) --phase run --out F [sf_dir]             # one session's pass
 
 Env: CLUSTER_POSTURE_QUERIES=a,b,c limits the query set (the pytest
-e2e assertion runs a 3-query subset; the full 16-query record is the
+subset runs 3 queries; the full 16-query record is the
 BENCH_NOTES evidence run).  CLUSTER_POSTURE_HOSTS sets the --hosts list
 (default "localhost,localhost,localhost" = master + TWO worker
 instances, the reference's own example layout —
@@ -32,6 +32,10 @@ count matches the worker-instance count.
 The per-session pass is also the `main(argv)` the runner invokes, so the
 cluster phase exercises the full reference launch contract
 (`bin/dask-ssh-docker:61-78` hosts handling → bootstrap → run → teardown).
+On an already running master, run the local pass, then
+`runner --master spark://… tools/cluster_posture_e2e.py -- --out F [sf_dir]`,
+then `compare(local_out, cluster_out)`: the pytest subset does this on
+its module's standalone master.
 """
 
 from __future__ import annotations
@@ -99,6 +103,9 @@ def run_phase(spark, sf_dir: str, out_path: str) -> int:
         "advisory": spark.conf.get(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"
         ),
+        "checkpoint_manager": spark.conf.get(
+            "spark.sql.streaming.checkpointFileManagerClass", None
+        ),
     }
     rows = {}
     for name in QUERIES:
@@ -146,6 +153,8 @@ def main(argv: list[str]) -> int:
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert pf == "false", f"cluster posture parallelismFirst={pf}"
     assert width >= 400, f"cluster shuffle width {width}"
+    manager = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass", None)
+    assert manager is None, f"cluster checkpoint manager {manager}"
     expect = int(os.environ.get("CLUSTER_POSTURE_EXPECT_EXECUTORS", "0"))
     if expect:
         # getExecutorMemoryStatus counts the driver too; wait briefly for
@@ -214,12 +223,20 @@ def _orchestrate(sf_dir: str) -> int:
     ).returncode
     if rc:
         return rc
-    a = json.load(open(local_out))
-    b = json.load(open(cluster_out))
+    return compare(local_out, cluster_out)
+
+
+def compare(local_out: str, cluster_out: str) -> int:
+    """Print each query's rows, plan shape and pins under both postures;
+    1 if any query's rows or plan shape differ, else 0."""
+    with open(local_out) as fh:
+        a = json.load(fh)
+    with open(cluster_out) as fh:
+        b = json.load(fh)
     print(f"local conf:   {a['conf']}")
     print(f"cluster conf: {b['conf']}")
     bad = []
-    for name in QUERIES:
+    for name in a["queries"]:
         qa, qb = a["queries"][name], b["queries"][name]
         same_shape = qa["shape"] == qb["shape"]
         same_rows = qa["rows"] == qb["rows"]
