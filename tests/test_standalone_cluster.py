@@ -224,7 +224,7 @@ def test_runner_hosts_end_to_end(standalone_master, tmp_path):
     assert data["scatter_sum"] == sum(range(100))
 
 
-def test_cluster_posture_e2e_subset(standalone_master, tmp_path, capsys):
+def test_cluster_posture_e2e_subset(standalone_master, sf_dir, tmp_path, capsys):
     """VERDICT r9 item 5: the core queries must EXECUTE under the cluster
     posture (parallelismFirst=false, width>=400, static pins at session
     width) with plan shapes identical to the local posture's.  Runs the
@@ -246,10 +246,10 @@ def test_cluster_posture_e2e_subset(standalone_master, tmp_path, capsys):
             "q1_pricing_summary,window_cumsum,setsim_prefix_pairs",
     }
     for cmd in (
-        [tool, "--phase", "run", "--out", local, "/root/testdata/sf0.001"],
+        [tool, "--phase", "run", "--out", local, sf_dir],
         ["-m", "dask_ssh_docker_spark.runner", "--master", standalone_master,
          "--conf", "spark.ui.enabled=false", "--conf", "spark.cores.max=2",
-         tool, "--", "--out", cluster, "/root/testdata/sf0.001"],
+         tool, "--", "--out", cluster, sf_dir],
     ):
         proc = subprocess.run(
             [sys.executable, *cmd], env=env, capture_output=True, text=True,
