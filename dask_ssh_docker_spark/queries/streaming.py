@@ -6,6 +6,9 @@ SQL — proving the batch/streaming twins produce identical answers.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
@@ -19,6 +22,16 @@ from ..streaming import (
     tumbling_counts,
 )
 from .registry import query
+
+
+#: snapshot dirs that frames returned by stream_mv_user_totals read
+_MV_SNAPSHOT_DIRS: list[str] = []
+
+
+@atexit.register
+def _remove_mv_snapshot_dirs() -> None:
+    for path in _MV_SNAPSHOT_DIRS:
+        shutil.rmtree(path, True)
 
 
 @query(
@@ -234,7 +247,7 @@ def stream_mv_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge is lossless across arbitrary batch boundaries."""
     import tempfile
 
-    from ..streaming.mv import incremental_agg_mv, read_mv
+    from ..streaming.mv import incremental_agg_mv, prune_mv, read_mv
 
     base = _staged_event_slices(spark, sf_dir, 3)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -265,8 +278,10 @@ def stream_mv_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ts").alias("max_ts"),
         )
 
-    # the snapshot dir stays: the returned frame reads it
+    # the returned frame reads the snapshot dir's current version, so the
+    # dir stays until exit; the superseded versions go once the query ends
     snap_dir = tempfile.mkdtemp(prefix="spark_graft_mv_snap_")
+    _MV_SNAPSHOT_DIRS.append(snap_dir)
     with tempfile.TemporaryDirectory(prefix="spark_graft_mv_ckpt_") as ckpt:
         q = incremental_agg_mv(
             stream,
@@ -277,6 +292,7 @@ def stream_mv_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint=ckpt,
         )
         q.awaitTermination()
+    prune_mv(snap_dir)
     return read_mv(spark, snap_dir).select(
         "user_id",
         "n_events",

@@ -48,6 +48,18 @@ Defaults are tuned for analytics at scale:
   Cluster masters keep the default: there checkpoints live on HDFS or
   an object store, where the FileContext rename is the atomic-overwrite
   path.  A caller's value wins.
+- On local masters, ``file:`` paths go through
+  ``sparkgraft.NioLocalFileSystem`` (``jvm/``, its jar appended to
+  ``spark.driver.extraClassPath``): Hadoop's checksummed local
+  filesystem, whose raw layer sets permission bits with one
+  ``java.nio`` call.  Without libhadoop, Hadoop's own raw layer forks
+  ``chmod`` for every local file create and mkdir: each data file, each
+  ``.crc`` file, each committer directory (60 forks of ≈3–6 ms for one
+  ``stream_mv_user_totals`` run and its parquet sink).  Modes, umask and
+  ``.crc`` files are Hadoop's.  Cluster masters keep Hadoop's default:
+  executor hosts need not have the jar.  A caller's
+  ``spark.hadoop.fs.file.impl`` wins; a caller's class path is kept and
+  the jar appended.
 """
 
 from __future__ import annotations
@@ -61,9 +73,16 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+from .jvm import JAR as _JVM_JAR
+from .jvm import LOCAL_FS_CLASS
+
 #: the directory of the worker daemon shim, alone, for the worker path
 _PYWORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker")
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+_DRIVER_CLASSPATH = "spark.driver.extraClassPath"
+#: path-list confs where a caller's value is kept and the engine's appended
+_PATH_CONFS = (_WORKER_PATH, _DRIVER_CLASSPATH)
+_FILE_FS = "spark.hadoop.fs.file.impl"
 _UDS = "spark.python.unix.domain.socket.enabled"
 _UDS_DIR = "spark.python.unix.domain.socket.dir"
 _CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
@@ -117,14 +136,17 @@ def default_conf(parallelism: int | None = None, master: str | None = None) -> d
         out[_WORKER_PATH] = _PYWORKER_DIR
         # streaming checkpoints rename without forking (module docstring)
         out[_CHECKPOINT_MANAGER] = _FS_CHECKPOINT_MANAGER
+        # local files get their permissions without forking (module docstring)
+        out[_DRIVER_CLASSPATH] = _JVM_JAR
+        out[_FILE_FS] = LOCAL_FS_CLASS
     out.update({
         # --- optimizer / runtime re-planning ---
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        # Coalescing posture is SCOPED by master (VERDICT r7 item 1 —
-        # the r8 two-pass A/B, AB_CONF_r08*.json, isolated the r7
-        # core-suite regression to parallelismFirst=false on local):
+        # Coalescing posture is SCOPED by master, and local masters keep
+        # parallelismFirst=true: false slowed the core suite in two A/B
+        # passes:
         #
         # - LOCAL: Spark's default parallelismFirst=true.  Shuffle bytes
         #   are a bad proxy for compute density at bench scale — a 10 MB
@@ -220,7 +242,7 @@ def _session_conf(master: str, conf: dict[str, str] | None = None) -> dict[str, 
     turned it off.  Makes the socket directory on first local use."""
     merged = default_conf(master=master)
     for k, v in (conf or {}).items():
-        if k == _WORKER_PATH and k in merged:  # keep the caller's path, add the shim's
+        if k in _PATH_CONFS and k in merged:  # keep the caller's path, add the engine's
             v = os.pathsep.join((v, merged[k]))
         merged[k] = v
     if master.startswith("local") and merged.setdefault(_UDS, "true").lower() == "true":

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,7 +77,8 @@ def read_mv(
     """Load a snapshot: the current one (follows the ``_LATEST`` pointer)
     or, with ``version=``, a specific retained epoch — Delta-style time
     travel (``VERSION AS OF``); old version directories are retained, so
-    any committed epoch stays readable until the caller prunes them.
+    any committed epoch stays readable until the caller prunes them
+    (:func:`prune_mv`).
     Every version has the schema the pointer records."""
     vdir = None
     if version is not None:
@@ -89,6 +91,18 @@ def read_mv(
     if ptr is None:
         raise FileNotFoundError(f"no committed snapshot under {snapshot_dir}")
     return spark.read.schema(ptr[2]).parquet(vdir or ptr[1])
+
+
+def prune_mv(snapshot_dir: str) -> None:
+    """Remove every retained version directory but the current one: the
+    current snapshot stays readable, older epochs leave time travel."""
+    ptr = _read_pointer(snapshot_dir)
+    if ptr is None:
+        return
+    current = os.path.basename(ptr[1])
+    for name in os.listdir(snapshot_dir):
+        if name != current and name[:1] == "v" and name[1:].isdigit():
+            shutil.rmtree(os.path.join(snapshot_dir, name))
 
 
 def incremental_agg_mv(

@@ -1,13 +1,18 @@
-"""Streaming checkpoint files on local masters.
+"""Streaming checkpoint files and local file writes on local masters.
 
 The engine session writes streaming offset, commit and source logs and
 state-store files through Spark's FileSystem-based checkpoint manager.
 The FileContext-based default renames each temp file after asking for the
 link status of both ends of the file and of its ``.crc``; without
-libhadoop every such ask forks ``readlink`` from the JVM.
+libhadoop every such ask forks ``readlink`` from the JVM.  The engine's
+``file:`` filesystem sets permission bits through ``java.nio``, where
+Hadoop's forks ``chmod`` for every local create and mkdir.
 
-- The fork pin puts logging ``readlink`` and ``chmod`` shims first on the
-  JVM's ``PATH`` and counts the ``readlink`` forks on checkpoint paths.
+- The fork pins put logging ``readlink`` and ``chmod`` shims first on the
+  JVM's ``PATH`` and count the ``readlink`` forks on checkpoint paths and
+  every ``chmod`` fork.
+- The parity pins compare the modes and ``.crc`` files that engine and
+  plain sessions leave.
 - The conf pin checks which masters get the manager.
 - The resume pins restart streams on checkpoints the manager wrote."""
 
@@ -16,6 +21,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import re
 import shutil
 import stat
 import subprocess
@@ -59,6 +65,27 @@ def _write_slices(src, n_files=3, rows=60):
         )
 
 
+#: the random and per-session parts of Spark's file names
+_IDS = re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}|(?<=rdd-)[0-9]+")
+
+
+def _tree(root: str) -> dict[str, str]:
+    """Every dir and file under ``root``, its name's ids masked: its mode,
+    and for a ``.crc`` file whether its size fits its data file's (an
+    8-byte header and 4 bytes for each 512-byte chunk)."""
+    out = {}
+    for dirpath, dirs, files in os.walk(root):
+        for name in dirs + files:
+            path = os.path.join(dirpath, name)
+            mode = f"{stat.S_IMODE(os.lstat(path).st_mode):o}"
+            if name.startswith(".") and name.endswith(".crc"):
+                data = os.path.join(dirpath, name[1:-len(".crc")])
+                chunks = -(-os.path.getsize(data) // 512)
+                mode += " crc" if os.path.getsize(path) == 8 + 4 * chunks else " bad crc"
+            out[_IDS.sub("<id>", os.path.relpath(path, root))] = mode
+    return out
+
+
 SCRIPT = """
 import json, os, sys
 sys.path.insert(0, {repo!r})
@@ -67,13 +94,14 @@ from pyspark.sql import SparkSession, functions as F
 from dask_ssh_docker_spark.session import get_session
 from dask_ssh_docker_spark.streaming import tumbling_counts
 from dask_ssh_docker_spark.streaming.mv import incremental_agg_mv
-from test_checkpoint_files import SCHEMA, _write_slices
+from test_checkpoint_files import SCHEMA, _tree, _write_slices
 
 if {engine!r}:
     spark = get_session(master="local[2]")
 else:
     spark = (SparkSession.builder.master("local[2]")
              .config("spark.ui.enabled", "false").getOrCreate())
+spark.conf.set("spark.sql.shuffle.partitions", "4")  # one state-store layout
 work = {work!r}
 src = os.path.join(work, "src")
 _write_slices(src)
@@ -89,9 +117,16 @@ agg = (tumbling_counts(stream()).writeStream.format("memory").queryName("counts"
        .outputMode("update").option("checkpointLocation", os.path.join(work, "ckpt_agg"))
        .trigger(availableNow=True).start())
 agg.awaitTermination()
+pq = os.path.join(work, "pq")
+spark.range(10).repartition(4).write.parquet(pq)
+spark.sparkContext.setCheckpointDir(os.path.join(work, "rdd_ckpt"))
+checkpointed = spark.range(10).repartition(4).checkpoint(eager=True)
 print("RESULT", json.dumps(dict(
     manager=spark.conf.get("spark.sql.streaming.checkpointFileManagerClass", None),
-    batches=[sum(1 for p in q.recentProgress if p["numInputRows"]) for q in (mv, agg)])))
+    batches=[sum(1 for p in q.recentProgress if p["numInputRows"]) for q in (mv, agg)],
+    rows=[spark.read.parquet(pq).count(), checkpointed.count()],
+    trees={{name: _tree(os.path.join(work, name))
+           for name in ("pq", "rdd_ckpt", "ckpt_agg/state")}})))
 spark.stop()
 """
 
@@ -125,6 +160,7 @@ def _forks(tmp_path, engine: bool) -> dict:
         log = tmp_path / f"{cmd}.log"
         out[cmd] = log.read_text().splitlines() if log.exists() else []
     out["checkpoints"] = [str(work / "ckpt_mv"), str(work / "ckpt_agg")]
+    out["parquet"] = str(work / "pq")
     return out
 
 
@@ -143,10 +179,12 @@ def plain_forks(tmp_path_factory):
 
 
 def test_engine_checkpoints_fork_no_readlink(engine_forks):
+    """Nor any ``chmod``: not for the streams, the parquet write or the
+    reliable checkpoint."""
     assert engine_forks["manager"] == _FS_CHECKPOINT_MANAGER
     assert engine_forks["batches"] == [3, 3]
     assert _on_checkpoints(engine_forks["readlink"], engine_forks["checkpoints"]) == []
-    assert engine_forks["chmod"]  # the shims are on the JVM's PATH
+    assert engine_forks["chmod"] == []
 
 
 def test_plain_session_checkpoints_fork_readlink(plain_forks):
@@ -155,6 +193,29 @@ def test_plain_session_checkpoints_fork_readlink(plain_forks):
     assert plain_forks["manager"] is None
     assert plain_forks["batches"] == [3, 3]
     assert _on_checkpoints(plain_forks["readlink"], plain_forks["checkpoints"])
+    assert plain_forks["chmod"]  # the shims are on the JVM's PATH
+
+
+def test_parquet_write_forks_chmod_in_plain_sessions_only(engine_forks, plain_forks):
+    """A 10-row, 4-partition parquet write: Hadoop's local filesystem
+    forks ``chmod`` for its files, ``.crc`` files and committer dirs; the
+    engine's forks none."""
+    assert engine_forks["rows"] == plain_forks["rows"] == [10, 10]
+    assert _on_checkpoints(engine_forks["chmod"], [engine_forks["parquet"]]) == []
+    assert _on_checkpoints(plain_forks["chmod"], [plain_forks["parquet"]])
+
+
+@pytest.mark.parametrize("tree", ["pq", "rdd_ckpt", "ckpt_agg/state"])
+def test_engine_and_plain_sessions_leave_the_same_modes_and_crcs(
+    engine_forks, plain_forks, tree
+):
+    """A parquet write, a reliable ``checkpoint()`` and a stateful
+    stream's state store: the same dirs and files with the same modes,
+    and the same ``.crc`` files."""
+    engine, plain = engine_forks["trees"][tree], plain_forks["trees"][tree]
+    assert any(name.endswith(".crc") for name in engine), engine
+    assert not any(mode.endswith("bad crc") for mode in engine.values()), engine
+    assert engine == plain
 
 
 def test_manager_on_local_masters_only_and_caller_wins():

@@ -23,6 +23,8 @@ import time
 
 import pytest
 
+from dask_ssh_docker_spark.jvm import LOCAL_FS_CLASS
+
 SBIN = "/opt/spark/sbin"
 MASTER_PORT = 7077
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -258,9 +260,14 @@ def test_cluster_posture_e2e_subset(standalone_master, sf_dir, tmp_path, capsys)
         assert proc.returncode == 0, (proc.stdout[-3000:], proc.stderr[-2000:])
     with open(cluster) as fh:
         conf = json.load(fh)["conf"]
+    with open(local) as fh:
+        local_conf = json.load(fh)["conf"]
     assert conf["master"] == standalone_master
     # the local-only streaming checkpoint manager stays off the cluster
     assert conf["checkpoint_manager"] is None
+    # so does the local-only file: filesystem: the cluster keeps Hadoop's
+    assert local_conf["file_fs"] == LOCAL_FS_CLASS
+    assert conf["file_fs"] != LOCAL_FS_CLASS
     assert compare(local, cluster) == 0
     out = capsys.readouterr().out
     assert "all plans/rows match across postures" in out

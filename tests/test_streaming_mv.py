@@ -66,6 +66,22 @@ def test_mv_multi_batch_equals_one_shot(spark, sf_dir):
         assert a[k]["max_ts"] == b[k]["max_ts"], k
 
 
+def test_stream_mv_keeps_only_the_snapshot_it_reads(spark, sf_dir):
+    """Once its stream ends, ``stream_mv_user_totals`` prunes the
+    superseded versions; its snapshot dir is registered for removal at
+    exit."""
+    from dask_ssh_docker_spark.queries import REGISTRY
+    from dask_ssh_docker_spark.queries.streaming import _MV_SNAPSHOT_DIRS
+
+    n_dirs = len(_MV_SNAPSHOT_DIRS)
+    mv = REGISTRY["stream_mv_user_totals"].fn(spark, sf_dir)
+    [snap] = _MV_SNAPSHOT_DIRS[n_dirs:]
+    assert sorted(os.listdir(snap)) == ["_LATEST", "v2"]
+    assert mv.count() == read_mv(spark, snap, version=2).count() > 0
+    with pytest.raises(FileNotFoundError, match="version 1 not found"):
+        read_mv(spark, snap, version=1)
+
+
 def test_mv_replayed_epoch_is_skipped(spark, sf_dir):
     """Simulate a crash between snapshot commit and checkpoint commit:
     re-running the stream against a snapshot dir whose pointer already

@@ -106,6 +106,9 @@ def run_phase(spark, sf_dir: str, out_path: str) -> int:
         "checkpoint_manager": spark.conf.get(
             "spark.sql.streaming.checkpointFileManagerClass", None
         ),
+        "file_fs": spark._jvm.org.apache.hadoop.fs.FileSystem.get(
+            spark._jvm.java.net.URI("file:///"), sc._jsc.hadoopConfiguration()
+        ).getClass().getName(),
     }
     rows = {}
     for name in QUERIES:
@@ -155,6 +158,8 @@ def main(argv: list[str]) -> int:
     assert width >= 400, f"cluster shuffle width {width}"
     manager = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass", None)
     assert manager is None, f"cluster checkpoint manager {manager}"
+    file_fs = spark.conf.get("spark.hadoop.fs.file.impl", None)
+    assert file_fs is None, f"cluster file: filesystem {file_fs}"
     expect = int(os.environ.get("CLUSTER_POSTURE_EXPECT_EXECUTORS", "0"))
     if expect:
         # getExecutorMemoryStatus counts the driver too; wait briefly for
