@@ -7,32 +7,50 @@ calls (``dask.delayed(sum)(range(1000)).compute()`` at
 ``/root/reference/example/custom_image/test.py:7``).  This module gives
 a migrating user that exact idiom — ``delayed(fn)(*args).compute()``,
 including nested ``Delayed`` arguments and containers of them — while
-running every task in Spark's Python workers, not the driver:
+running every task in Spark's Python workers, not the driver.  Each
+graph runs under one of two plans:
 
-- nodes are fused into Spark tasks by linear fusion only: a node whose
-  only pending dependency has it as sole consumer runs in that
-  dependency's task, so a chain is one task and a fused task never
-  holds two nodes that could have run in parallel;
-- fused tasks run level by level, ONE Spark job per fused level packed
-  into at most ``slots`` partitions, where ``slots`` is the number of
-  tasks the cluster runs at once (:func:`.session.task_slots`) — a
-  level of at most ``slots`` tasks still runs one task per partition;
-  a wider level's tasks are dealt round-robin onto the partitions, so a
-  run of heavy neighbours (one dominant group's leaves) spreads across
-  slots;
-- every node's value comes back to the driver and feeds downstream
-  tasks.
+- **levels** — nodes are fused into Spark tasks by linear fusion: a node
+  whose only pending dependency has it as sole consumer runs in that
+  dependency's task, so a chain is one task.  Fused tasks run level by
+  level, ONE Spark job per fused level packed into at most ``slots``
+  partitions, where ``slots`` is the number of tasks the cluster runs
+  at once (:func:`.session.task_slots`) — a level of at most ``slots``
+  tasks still runs one task per partition; a wider level's tasks are
+  dealt round-robin onto the partitions, so a run of heavy neighbours
+  (one dominant group's leaves) spreads across slots;
+- **one task** — the whole graph runs as one fused task in one job, its
+  nodes in topological order.
+
+Either way every node's value comes back to the driver (and feeds
+downstream tasks), together with the time its body took.  The executor
+keeps, per SparkContext, two running averages that it measures itself
+with no extra job: each callable's body time (keyed by a function's
+code object, a ``functools.partial``'s wrapped function, or the
+hashable callable itself; an unhashable callable stays unknown) and a
+level's overhead (a job's wall minus its busiest partition's body
+time).  A graph runs as one task only when every node's callable has
+an estimate, it has at least two levels, and ``O + Σ bodies`` is less
+than ``Σ_levels (O + the busiest partition's bodies)``, ``O`` being the
+level overhead.  This rule replaces "a fused task never holds two
+nodes that could have run in parallel": such nodes share a task only
+when the measured costs say one task finishes sooner.  So a first
+compute, any unmeasured callable, heavy bodies and a single-level wave
+(``Client.map``) keep the level plan.  A wrong estimate costs at most
+one compute: the run measures the true body times, and the next
+compute of that shape re-plans.
 
 Packing trades Spark's per-task load balancing for fewer task launches.
 It pays while node bodies are short next to Spark's per-task launch
 cost: ≈0.011 s of a slot's time per task on a 4-core VM in an engine
-session on a local master (its worker daemon, over Unix sockets).  A
-session the engine did not start pays ≈0.02 s more for loopback TCP's
-delayed-ACK stall and ≈0.2 s more for PySpark's own daemon, whose
-workers re-read ``pyspark.zip`` and the Spark core jar at every task
-(:mod:`.session`).  A level of ``n > slots`` heavy nodes of uneven
-cost can finish up to ``ceil(n / slots)`` times later than one
-partition per node would.
+session on a local master (its worker daemon, over Unix sockets),
+where a level's job costs ≈25–35 ms while the bodies of a small graph
+take microseconds.  A session the engine did not start pays ≈0.02 s
+more for loopback TCP's delayed-ACK stall and ≈0.2 s more for
+PySpark's own daemon, whose workers re-read ``pyspark.zip`` and the
+Spark core jar at every task (:mod:`.session`).  A level of
+``n > slots`` heavy nodes of uneven cost can finish up to
+``ceil(n / slots)`` times later than one partition per node would.
 
 Deliberate scope (PARITY.md §2.A): this is a *migration on-ramp* for the
 reference's demonstrated pattern, not a general graph scheduler — big
@@ -49,8 +67,12 @@ with ``pure=False`` defaults.
 
 from __future__ import annotations
 
+import functools
 import itertools
+import time
+import types
 import uuid
+import weakref
 from typing import Any, Callable
 
 from pyspark.sql import SparkSession
@@ -164,7 +186,8 @@ def _substitute(
 def _task_body(bmap: dict[int, Any]) -> Callable[[list], list]:
     """The Spark task for one partition: run each of its fused tasks'
     payloads in turn — the nodes in order, resolving markers — and
-    return every node's value, per fused task.  Nested, so cloudpickle
+    return ``(values, body seconds)`` per fused task, one entry per node:
+    each body time covers the ``fn(*args, **kwargs)`` call alone.  Nested, so cloudpickle
     ships it by value (no import of this package on the worker);
     ``bmap`` rides the closure, which CAN carry Broadcast handles
     (payload data cannot)."""
@@ -172,6 +195,7 @@ def _task_body(bmap: dict[int, Any]) -> Callable[[list], list]:
 
     def run(blobs: list) -> list:
         import pickle
+        from time import perf_counter
 
         out = []
         for blob in blobs:
@@ -193,9 +217,13 @@ def _task_body(bmap: dict[int, Any]) -> Callable[[list], list]:
                     return {k: res(v) for k, v in o.items()}
                 return o
 
+            durs: list = []
             for fn, args, kwargs in pickle.loads(blob):
-                vals.append(fn(*res(args), **res(kwargs)))
-            out.append(vals)
+                args, kwargs = res(args), res(kwargs)
+                t = perf_counter()
+                vals.append(fn(*args, **kwargs))
+                durs.append(perf_counter() - t)
+            out.append((vals, durs))
         return out
 
     return run
@@ -245,15 +273,77 @@ def _fused_levels(deps: dict[str, set[str]]) -> list[list[list[str]]]:
     return levels
 
 
+class _Costs:
+    """Running averages the executor measures for one SparkContext: each
+    callable's body time (by :func:`_body_key`) and the per-job overhead
+    of a level, both in seconds.  Each update halves the old value
+    against the new sample, as ``distributed`` keeps its per-prefix
+    ``duration_average``."""
+
+    __slots__ = ("body", "level")
+
+    def __init__(self) -> None:
+        self.body: dict[Any, float] = {}
+        self.level: float | None = None
+
+
+#: per SparkContext: a ``spark://`` level costs ≈10× a local one
+_COSTS: "weakref.WeakKeyDictionary[Any, _Costs]" = weakref.WeakKeyDictionary()
+
+
+def _average(old: float | None, new: float) -> float:
+    return new if old is None else (old + new) / 2
+
+
+def _body_key(fn: Callable) -> Any:
+    """The key a callable's body time is kept under: a Python function's
+    code object (its closures and re-definitions share it), a
+    ``functools.partial``'s wrapped function, otherwise the callable
+    itself — or ``None`` (never measured) when it is unhashable."""
+    while isinstance(fn, functools.partial):
+        fn = fn.func
+    if isinstance(fn, types.FunctionType):
+        return fn.__code__
+    try:
+        hash(fn)
+    except TypeError:
+        return None
+    return fn
+
+
+def _fuse(
+    levels: list[list[list[str]]],
+    est: dict[str, float | None],
+    overhead: float | None,
+    slots: int,
+) -> bool:
+    """Whether one task running the whole graph beats one job per level.
+
+    ``est`` maps each node to its body-time estimate and ``overhead`` is
+    the per-job cost ``O``.  Fuse only when every estimate exists, the
+    graph has at least two levels, and ``O + Σ bodies`` undercuts
+    ``Σ_levels (O + the busiest partition's bodies)`` under the
+    round-robin dealing :func:`_compute_graph` gives each level."""
+    if overhead is None or len(levels) < 2 or None in est.values():
+        return False
+    leveled = 0.0
+    for tasks in levels:
+        n = min(len(tasks), slots)
+        cost = [sum(est[k] for k in members) for members in tasks]
+        leveled += overhead + max(sum(cost[r::n]) for r in range(n))
+    return overhead + sum(est.values()) < leveled
+
+
 def compute(
     *outputs: Delayed,
     spark: SparkSession | None = None,
     _precomputed: dict[str, Any] | None = None,
 ) -> tuple:
     """Evaluate one or more ``Delayed`` graphs; returns their values in
-    order.  Nodes run fused, one Spark job per fused level in at most
-    ``slots`` partitions, on executor Python workers (tests pin
-    worker-side execution via pid).
+    order.  Nodes run on executor Python workers (tests pin worker-side
+    execution via pid), one Spark job per fused level in at most
+    ``slots`` partitions, or as one task when the measured costs say
+    that finishes sooner (module docstring).
 
     ``_precomputed``: results keyed by node key that are already known
     (the futures layer's run-once cache) — such nodes and their whole
@@ -300,6 +390,12 @@ def _compute_graph(
     if not deps:
         return done
     slots = task_slots(sc)
+    costs = _COSTS.setdefault(sc, _Costs())
+    body_keys = {k: _body_key(nodes[k].fn) for k in deps}
+    levels = _fused_levels(deps)
+    est = {k: costs.body.get(b) for k, b in body_keys.items()}
+    if _fuse(levels, est, costs.level, slots):
+        levels = [[[k for tasks in levels for members in tasks for k in members]]]
 
     # cloudpickle the payloads ourselves: RDD *data* rides the plain
     # pickler, which can't carry lambdas/closures/test-local functions
@@ -307,7 +403,8 @@ def _compute_graph(
     # ships tasks to workers
     from pyspark import cloudpickle
 
-    for tasks in _fused_levels(deps):
+    samples: dict[Any, list[float]] = {}  # body key → this graph's body times
+    for tasks in levels:
         bcs: dict[int, Any] = {}  # broadcasts used by this level's tasks
         payloads = []
         for members in tasks:
@@ -326,12 +423,22 @@ def _compute_graph(
             )
         # deal the tasks round-robin: partition r runs tasks r, r+n, …
         n = min(len(payloads), slots)
+        t0 = time.perf_counter()
         results = (
             sc.parallelize([payloads[r::n] for r in range(n)], n)
             .map(_task_body(bcs))
             .collect()
         )
+        wall = time.perf_counter() - t0
         for i, members in enumerate(tasks):
-            done.update(zip(members, results[i % n][i // n]))
+            vals, durs = results[i % n][i // n]
+            done.update(zip(members, vals))
+            for k, d in zip(members, durs):
+                samples.setdefault(body_keys[k], []).append(d)
+        busiest = max(sum(sum(durs) for _, durs in part) for part in results)
+        costs.level = _average(costs.level, wall - busiest)
 
+    for b, ds in samples.items():
+        if b is not None:
+            costs.body[b] = _average(costs.body.get(b), sum(ds) / len(ds))
     return done

@@ -6,13 +6,16 @@ cluster (``bin/dask-ssh-docker:77-78``), giving scripts the
 ``client.gather`` vocabulary.  This module gives a migrating user those
 exact call shapes, executed by the fused scheduler of :mod:`.delayed` —
 every task runs in Spark's Python workers, one Spark job per fused level
-in at most ``slots`` partitions, with every task's value returned:
+in at most ``slots`` partitions, with every task's value returned.  A
+gathered graph of two or more levels runs as one task instead when the
+body times and level overhead the executor measured say that finishes
+sooner (never on the first gather of an unmeasured callable):
 
 - ``submit(fn, *args)`` → a :class:`Future`; arguments may be other
   ``Future``/``Delayed`` values (chaining) or scattered data.
 - ``map(fn, *iterables)`` → a list of futures, one per element — the
   whole wave executes as ONE Spark job of at most ``slots`` tasks when
-  gathered.
+  gathered (a single level, so it always keeps its partitions).
 - ``scatter(x)`` → ships ``x`` to the cluster ONCE as a Spark broadcast
   and returns a reference usable as a task argument (torrent-style
   distribution, never per-task payload copies).

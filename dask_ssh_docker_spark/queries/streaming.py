@@ -240,8 +240,10 @@ def _stage_into(spark: SparkSession, sf_dir: str, n_slices: int, base: str) -> N
 def stream_mv_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialized view maintained across THREE real
     micro-batches (events split into 3 file slices, maxFilesPerTrigger=1):
-    each batch's per-user partials (count / exact-decimal sum / max ts)
-    merge into a versioned parquet snapshot via ``streaming/mv.py`` —
+    each batch's events (one partial row each: a count of 1, the exact
+    decimal value, the ts) merge per user, in one aggregation with the
+    current snapshot, into a versioned parquet snapshot via
+    ``streaming/mv.py`` —
     the lakehouse streaming-upsert-MV pattern.  The final snapshot must
     equal the one-shot batch aggregate exactly, proving the algebraic
     merge is lossless across arbitrary batch boundaries."""
@@ -270,12 +272,13 @@ def stream_mv_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
     def partial(batch: DataFrame) -> DataFrame:
-        return batch.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(12,2)"))
-            .cast("decimal(18,2)")
-            .alias("total_dec"),
-            F.max("ts").alias("max_ts"),
+        # one row per event: the MV merge sums and maxes them per user in
+        # the batch's one aggregation
+        return batch.selectExpr(
+            "user_id",
+            "CAST(1 AS BIGINT) AS n_events",
+            "CAST(CAST(value AS DECIMAL(12,2)) AS DECIMAL(18,2)) AS total_dec",
+            "ts AS max_ts",
         )
 
     # the returned frame reads the snapshot dir's current version, so the

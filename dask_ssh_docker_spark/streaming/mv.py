@@ -4,16 +4,17 @@ per-key snapshot — the lakehouse "streaming upsert MV" pattern (Delta
 ``MERGE`` in ``foreachBatch``) built from plain parquet + an atomic
 pointer file.
 
-Per micro-batch:
+Per micro-batch, ONE aggregation:
 
-1. aggregate the batch to per-key partials (map-side combine inside the
-   batch — only the partial frame shuffles, never raw rows);
-2. union the partials with the current snapshot and group by the keys,
-   combining mergeable metrics (sum/count → ``sum``, min → ``min``, max
-   → ``max``);
-3. write the merged snapshot to a NEW version directory and atomically
-   swing the ``_LATEST`` pointer (``os.replace``).  The pointer also
-   records the snapshot schema, which every version shares, so
+1. ``partial_agg`` maps the batch to partial rows — a per-row projection
+   of each metric, or per-key partials (both merge the same way);
+2. the partials, unioned with the current snapshot (batch 0 has none),
+   are grouped by the keys, combining mergeable metrics (sum/count →
+   ``sum``, min → ``min``, max → ``max``) and cast back to the partial
+   schema;
+3. the merged snapshot goes to a NEW version directory and the
+   ``_LATEST`` pointer swings atomically (``os.replace``).  The pointer
+   also records the snapshot schema, which every version shares, so
    :func:`read_mv` reads any version without a schema-inference job.
 
 Exactly-once: the pointer records the epoch that produced it; a replayed
@@ -23,9 +24,11 @@ twice.  A real table format (Delta/Iceberg) replaces the pointer dance
 with ACID commits; the per-batch *plan* — partial agg + key-partitioned
 merge — is identical.
 
-Scale shape (100 TB): per batch, one partial-agg shuffle over the batch
-(bounded by batch size) + one key-partitioned aggregate over the batch's
-partials and the snapshot.  Snapshot size is key-cardinality, not
+Scale shape (100 TB): per batch, one key-partitioned aggregate over the
+batch's partials and the snapshot.  Spark's map-side partial
+aggregation combines per key before the exchange, so the shuffle
+carries per-key partials of the batch (bounded by its key count) and
+the snapshot, never raw rows.  Snapshot size is key-cardinality, not
 stream length; combine functions must be commutative+associative, so
 batch arrival order can't change the result.
 """
@@ -37,12 +40,27 @@ import os
 import shutil
 from collections.abc import Callable, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 #: each mergeable kind's combining aggregate (counts add up like sums)
-_MERGE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
+_MERGE = {"sum": "sum", "count": "sum", "min": "min", "max": "max"}
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _merge_aggs(kinds: Mapping[str, str]) -> list[Column]:
+    """Each metric's combining aggregate, parsed from SQL and named after
+    the metric."""
+    aggs = []
+    for name, kind in kinds.items():
+        if kind not in _MERGE:
+            raise ValueError(f"unsupported merge kind {kind!r} for {name!r}")
+        aggs.append(F.expr(f"{_MERGE[kind]}({_quote(name)}) AS {_quote(name)}"))
+    return aggs
 
 
 def combine_snapshots(
@@ -53,12 +71,7 @@ def combine_snapshots(
     its algebraic kind.  SQL aggregates skip NULLs and ``groupBy`` puts
     NULL keys in one group, so a metric NULL on one side keeps the other
     side's value and NULL keys merge with each other."""
-    aggs = []
-    for name, kind in kinds.items():
-        if kind not in _MERGE:
-            raise ValueError(f"unsupported merge kind {kind!r} for {name!r}")
-        aggs.append(_MERGE[kind](name).alias(name))
-    return old.unionByName(new).groupBy(*keys).agg(*aggs)
+    return old.unionByName(new).groupBy(*keys).agg(*_merge_aggs(kinds))
 
 
 def _read_pointer(snapshot_dir: str) -> tuple[int, str, StructType] | None:
@@ -117,8 +130,10 @@ def incremental_agg_mv(
     everything currently available, then stops).  Returns the streaming
     query handle; read the result with :func:`read_mv`.
 
-    ``partial_agg`` maps a batch DataFrame to per-key partials whose
-    metric columns are each mergeable under ``kinds[name]``.  Metrics
+    ``partial_agg`` maps a batch DataFrame to partial rows — a per-row
+    projection, or per-key partials — whose metric columns are each
+    mergeable under ``kinds[name]``; the merge aggregates them per key
+    with the snapshot, so a projection costs no second aggregation.  Metrics
     that are NOT algebraically mergeable (exact distinct, exact median)
     need a sketch column instead (HLL / quantile sketch — see
     ``operators/rollup_cascade.py``).
@@ -131,21 +146,25 @@ def incremental_agg_mv(
         if ptr is not None and ptr[0] >= epoch_id:
             return  # replayed epoch: snapshot already includes this batch
         part = partial_agg(batch_df)
-        schema = part.schema  # pin: combine widens decimal sums at every merge
+        schema = part.schema  # pin: the merge widens decimal sums
         if ptr is not None:
             # every snapshot has the partial schema (the cast below), so
             # no schema-inference job; the batch session keeps AQE, which
             # coalesces the merge's shuffle to the snapshot's size
-            old = spark.read.schema(schema).parquet(ptr[1])
-            merged = combine_snapshots(old, part, keys, kinds)
-            # cast back to the partial schema so every snapshot version is
-            # schema-identical; callers must size decimal partials with
-            # enough headroom for the running total (documented above)
-            part = merged.select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema]
-            )
+            part = spark.read.schema(schema).parquet(ptr[1]).unionByName(part)
+        # cast back to the partial schema so every snapshot version is
+        # schema-identical; callers must size decimal partials with
+        # enough headroom for the running total (documented above)
+        merged = part.groupBy(*keys).agg(*_merge_aggs(kinds)).selectExpr(
+            *[
+                _quote(f.name) if f.name in keys
+                else f"CAST({_quote(f.name)} AS {f.dataType.simpleString()}) "
+                f"AS {_quote(f.name)}"
+                for f in schema
+            ]
+        )
         vdir = os.path.join(snapshot_dir, f"v{epoch_id}")
-        part.write.mode("overwrite").parquet(vdir)
+        merged.write.mode("overwrite").parquet(vdir)
         tmp = os.path.join(snapshot_dir, "_LATEST.tmp")
         with open(tmp, "w") as f:
             f.write(f"{epoch_id}\t{vdir}\t{schema.json()}")

@@ -28,6 +28,16 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def _no_delayed_costs():
+    """Each test starts with no measured ``delayed`` costs: the table
+    lives per process, and an earlier test's measurements would let a
+    first compute run as one task and change the jobs a test pins."""
+    mod = sys.modules.get("dask_ssh_docker_spark.delayed")
+    if mod is not None:
+        mod._COSTS.clear()
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

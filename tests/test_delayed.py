@@ -218,3 +218,172 @@ def test_task_slots_follow_the_master(spark):
     n = int(spark.sparkContext.master[len("local[") : -1])
     assert task_slots(spark.sparkContext) == n
     assert task_slots(_SC()) == 7
+
+
+# --- plan choice: measured body and level costs pick levels or one task ---
+
+
+def _wide_deps(n_leaves: int, group: int) -> dict[str, set[str]]:
+    """``n_leaves`` leaves summed per ``group``, then in total."""
+    deps: dict[str, set[str]] = {f"l{i}": set() for i in range(n_leaves)}
+    for g in range(0, n_leaves, group):
+        deps[f"g{g}"] = {f"l{i}" for i in range(g, g + group)}
+    deps["t"] = {k for k in deps if k[0] == "g"}
+    return deps
+
+
+def test_fuse_cheap_multi_level_graph():
+    from dask_ssh_docker_spark.delayed import _fuse, _fused_levels
+
+    deps = _wide_deps(16, 4)
+    est = dict.fromkeys(deps, 1e-5)
+    assert _fuse(_fused_levels(deps), est, 0.03, slots=4)
+
+
+def test_fuse_needs_every_estimate_and_a_level_overhead():
+    from dask_ssh_docker_spark.delayed import _fuse, _fused_levels
+
+    levels = _fused_levels(_wide_deps(16, 4))
+    est = dict.fromkeys(_wide_deps(16, 4), 1e-5)
+    assert not _fuse(levels, est, None, slots=4)
+    est["l3"] = None
+    assert not _fuse(levels, est, 0.03, slots=4)
+
+
+def test_fuse_never_takes_a_single_level():
+    from dask_ssh_docker_spark.delayed import _fuse, _fused_levels
+
+    wave = {f"m{i}": set() for i in range(8)}  # a Client.map wave
+    assert not _fuse(_fused_levels(wave), dict.fromkeys(wave, 0.0), 10.0, slots=4)
+    chain = {"a": set(), "b": {"a"}, "c": {"b"}}  # one fused task already
+    assert not _fuse(_fused_levels(chain), dict.fromkeys(chain, 0.0), 10.0, slots=4)
+
+
+def test_fuse_keeps_levels_for_heavy_bodies():
+    from dask_ssh_docker_spark.delayed import _fuse, _fused_levels
+
+    deps = _wide_deps(8, 8)  # 8 leaves -> one sum -> total
+    est = {k: 0.3 if k[0] == "l" else 1e-5 for k in deps}
+    assert not _fuse(_fused_levels(deps), est, 0.03, slots=4)
+    # one slot runs a level's tasks one after another anyway
+    assert _fuse(_fused_levels(deps), est, 0.03, slots=1)
+
+
+def test_fuse_rule_compares_the_busiest_dealt_partition():
+    from dask_ssh_docker_spark.delayed import _fuse, _fused_levels
+
+    # levels: [a, b, c] (dealt a,c | b on 2 slots), then d:
+    # levels cost (O + 1.5) + (O + 0); one task costs O + 2.5
+    deps = {"a": set(), "b": set(), "c": set(), "d": {"a", "b", "c"}}
+    est = {"a": 1.0, "b": 1.0, "c": 0.5, "d": 0.0}
+    levels = _fused_levels(deps)
+    assert not _fuse(levels, est, 1.0, slots=2)
+    assert _fuse(levels, est, 1.01, slots=2)
+
+
+def test_body_keys():
+    import functools
+    import operator
+
+    from dask_ssh_docker_spark.delayed import _body_key
+
+    def make(k):
+        return lambda x: x + k
+
+    assert _body_key(make(1)) is make(2).__code__  # closures share a code
+    assert _body_key(functools.partial(make(1), 3)) is make(1).__code__
+    part = functools.partial(functools.partial(operator.add, 1), 2)
+    assert _body_key(part) is operator.add
+    assert _body_key(sum) is sum
+
+    class Unhashable:
+        __hash__ = None
+
+        def __call__(self, x):
+            return x
+
+    assert _body_key(Unhashable()) is None
+
+
+def _wide() -> Delayed:
+    incs = [delayed(_inc)(i) for i in range(16)]
+    return delayed(sum)([delayed(sum)(incs[i : i + 4]) for i in range(0, 16, 4)])
+
+
+def test_repeated_cheap_graph_runs_as_one_task(spark, spark_work):
+    slots = task_slots(spark.sparkContext)
+    with spark_work() as first:
+        a = _wide().compute(spark)
+    with spark_work() as second:
+        b = _wide().compute(spark)
+    assert a == b == sum(range(1, 17))
+    assert (first.jobs, first.tasks) == (3, min(16, slots) + min(4, slots) + 1)
+    assert (second.jobs, second.tasks) == (1, 1)
+
+
+def test_graph_with_an_unmeasured_callable_keeps_levels(spark, spark_work):
+    slots = task_slots(spark.sparkContext)
+    _wide().compute(spark)
+
+    class Total:  # unhashable: its body time is never kept
+        __hash__ = None
+
+        def __call__(self, xs):
+            return sum(xs)
+
+    incs = [delayed(_inc)(i) for i in range(16)]
+    groups = [delayed(sum)(incs[i : i + 4]) for i in range(0, 16, 4)]
+    for total in (delayed(lambda xs: sum(xs))(groups), delayed(Total())(groups)):
+        with spark_work() as w:
+            assert total.compute(spark) == sum(range(1, 17))
+        assert (w.jobs, w.tasks) == (3, min(16, slots) + min(4, slots) + 1)
+    with spark_work() as w:  # the lambda is measured now; Total never is
+        delayed(Total())(groups).compute(spark)
+    assert w.jobs == 3
+
+
+def test_heavy_bodies_keep_levels_and_run_in_parallel(spark, spark_work):
+    import time
+
+    def nap(i):
+        time.sleep(0.2)
+        return i
+
+    slots = task_slots(spark.sparkContext)
+    if slots < 2:
+        pytest.skip("parallelism needs at least two task slots")
+    for _ in range(3):
+        total = delayed(sum)([delayed(nap)(i) for i in range(8)])
+        t0 = time.perf_counter()
+        with spark_work() as w:
+            assert total.compute(spark) == sum(range(8))
+        wall = time.perf_counter() - t0
+        assert (w.jobs, w.tasks) == (2, min(8, slots) + 1)
+        assert wall < 0.75 * 8 * 0.2  # well under the bodies run one by one
+
+
+def test_one_task_plan_surfaces_a_body_exception(spark, spark_work):
+    def check(x):
+        if x < 0:
+            raise ValueError(f"negative input {x}")
+        return x
+
+    def graph(sign):
+        return delayed(sum)([delayed(check)(sign * i) for i in range(1, 5)])
+
+    assert graph(1).compute(spark) == 10
+    with spark_work() as w:
+        with pytest.raises(Exception, match="negative input"):
+            graph(-1).compute(spark)
+    assert (w.jobs, w.tasks) == (1, 1)
+
+
+def test_one_task_plan_runs_on_a_worker(spark, spark_work):
+    def graph():
+        return delayed(set)([delayed(_pid)(i) for i in range(4)])
+
+    graph().compute(spark)
+    with spark_work() as w:
+        pids = graph().compute(spark)
+    assert (w.jobs, w.tasks) == (1, 1)
+    assert len(pids) == 1 and os.getpid() not in pids
